@@ -1,17 +1,40 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Parquet table accessors for the harness testdata (TESTDATA.md).
   *
   * Scans stay declarative (`spark.read.parquet`) so Catalyst pushes filters
   * and prunes columns into the parquet reader — at 100 TB the scan is the
   * dominant cost and `PushedFilters`/`ReadSchema` must reach the source.
+  *
+  * Building a read runs no Spark job. A bare `spark.read.parquet` infers
+  * the schema with a one-task job that reads the file's footer, on every
+  * call — a builder touching six tables ran six jobs before its action.
+  * [[Tables.read]] instead resolves a single file's schema once per
+  * process and reads with it declared (`spark.read.schema(s).parquet`),
+  * which skips inference. The cache key is
+  *  - the file's qualified path, length and modification time (one
+  *    driver-side Hadoop `getFileStatus`), and
+  *  - the session's parquet-reading confs: `spark.sql.parquet.*`,
+  *    `spark.sql.legacy.parquet.*` (e.g. `nanosAsLong`) and
+  *    `spark.sql.caseSensitive`,
+  * so a rewritten file or a changed conf infers again. Directories
+  * (write-then-read outputs, streaming sinks) keep the plain read.
+  *
+  * The schema is cached, never the `DataFrame`: one shared relation would
+  * give both sides of a self-join the same attribute IDs. Rebuilding the
+  * relation from the cached schema gives each call fresh IDs and the same
+  * plan, pushed filters and pruned columns as the inferred read.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  def apply(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def apply(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
   def region: DataFrame     = apply("region")
   def nation: DataFrame     = apply("nation")
   def customer: DataFrame   = apply("customer")
@@ -37,6 +60,41 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+
+  /** What a schema inferred from one parquet file depends on. */
+  private final case class SchemaKey(path: String, length: Long,
+      modified: Long, confs: Map[String, String])
+
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  private def readsParquet(conf: String): Boolean =
+    conf.startsWith("spark.sql.parquet.") ||
+      conf.startsWith("spark.sql.legacy.parquet.") ||
+      conf == "spark.sql.caseSensitive"
+
+  /** `spark.read.parquet(path)`, with a single file's schema taken from
+    * the per-process cache (see [[Tables]]) instead of inferred by a job;
+    * directories and missing paths keep the plain read. */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p))
+      catch { case _: FileNotFoundException => None }
+    status.filter(_.isFile) match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val confs = spark.conf.getAll.filter { case (k, _) => readsParquet(k) }
+        val key = SchemaKey(st.getPath.toString, st.getLen,
+          st.getModificationTime, confs)
+        val schema = Option(schemas.get(key)).getOrElse {
+          val inferred = spark.read.parquet(path).schema
+          schemas.putIfAbsent(key, inferred)
+          inferred
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** SCAN-PARALLELISM FLOOR for hash/compare-heavy per-row stages
     * (guide §2.5 "one huge unsplittable file → repartition immediately

@@ -36,20 +36,35 @@ object Quantiles {
     * beyond it the single sorted partition becomes the straggler. */
   private val DISTRIBUTED_CUM_THRESHOLD = 1L << 20
 
-  /** Inclusive running sum of `term` over a checkpointed distinct-value
-    * histogram, routed by measured cardinality (a 1-row count on the
-    * already-materialized blocks — the contract-bounded driver
-    * round-trip idiom). */
+  /** Inclusive running sum of `term` over a lazy distinct-value
+    * histogram, plus the broadcast grand total of `term` as `totalName`.
+    * Routes on Spark's own size estimate of the histogram (the one that
+    * picks broadcast joins: `optimizedPlan.stats.sizeInBytes` over the
+    * row width), so building it runs no job. Both routes are
+    * result-identical, so a misestimate costs speed only.
+    *
+    * Small: one single-partition window, left lazy — its two references
+    * to the histogram share one aggregation exchange (ReuseExchange).
+    * Large: the histogram is checkpointed here, the one place the
+    * [[bucketedCum]] contract is met, then runs the two-phase shape. */
   private def histCum(hist: DataFrame, valName: String, term: Column,
-      desc: Boolean, cumName: String): DataFrame =
-    if (hist.count() > DISTRIBUTED_CUM_THRESHOLD)
-      bucketedCum(hist, valName, term, desc, cumName)
-    else {
-      val v = col(valName)
-      val w = Window.orderBy(if (desc) v.desc else v.asc)
-        .rowsBetween(Window.unboundedPreceding, 0)
-      hist.withColumn(cumName, sum(term).over(w))
-    }
+      desc: Boolean, cumName: String, totalName: String): DataFrame = {
+    val rowBytes = 8 + hist.schema.fields.map(_.dataType.defaultSize).sum
+    val estRows = hist.queryExecution.optimizedPlan.stats.sizeInBytes /
+      rowBytes
+    val (h, cum) =
+      if (estRows > DISTRIBUTED_CUM_THRESHOLD) {
+        // unreplicated blocks — the documented lineage-cut tradeoff
+        val h = hist.localCheckpoint()
+        (h, bucketedCum(h, valName, term, desc, cumName))
+      } else {
+        val v = col(valName)
+        val w = Window.orderBy(if (desc) v.desc else v.asc)
+          .rowsBetween(Window.unboundedPreceding, 0)
+        (hist, hist.withColumn(cumName, sum(term).over(w)))
+      }
+    cum.crossJoin(broadcast(h.agg(sum(term).as(totalName))))
+  }
 
   /** TWO-PHASE distributed inclusive running sum of `term` over a
     * DISTINCT-value histogram, in `valName` order (desc when `desc`) —
@@ -75,7 +90,8 @@ object Quantiles {
     * be NaN-free (the house integer-metric contract); non-numeric
     * values degenerate to one bucket, still correct.
     *
-    * Callers pass an already-checkpointed histogram: it feeds the
+    * Callers pass an already-checkpointed histogram ([[histCum]]'s
+    * large route checkpoints before calling): it feeds the
     * (min, max) broadcast, both sides of the triangular offsets join,
     * and the main leg, and those subtrees are NOT exchange-identical,
     * so ReuseExchange cannot dedup them (measured 3.2× on q186 when
@@ -658,6 +674,11 @@ object Quantiles {
     * integer arithmetic — `cum·den ≥ num·n` avoids both the divide and
     * the `ceil(p·n)`-in-doubles cross-engine trap (§8.2).
     *
+    * Building the frame runs no Spark job when Spark's size estimate puts
+    * the histogram at ≤ 2²⁰ rows: it stays lazy under one single-partition
+    * window. Above that, the histogram is checkpointed (one job) and the
+    * running sum takes the two-phase [[bucketedCum]] route — same cuts.
+    *
     * @return one row of `c<PCT>` cut columns, for `broadcast` */
   def histogramCuts(df: DataFrame, v: Column,
       qs: Seq[(Int, Int)]): DataFrame = {
@@ -671,16 +692,13 @@ object Quantiles {
     // order would diverge cross-engine. n derives from the histogram
     // (sum of counts) — NOT a second scan of the input: the corpus is
     // read once, everything after is value-cardinality-sized.
-    // Histogram checkpointed once (value-cardinality-sized by
-    // contract; unreplicated blocks — the documented lineage-cut
-    // tradeoff), then the running sum routes on its measured size:
-    // single window below DISTRIBUTED_CUM_THRESHOLD, bucketed
+    // The running sum routes on the histogram's estimated size (see
+    // histCum): single window below DISTRIBUTED_CUM_THRESHOLD, bucketed
     // two-phase above it (the 100 TB high-cardinality-doubles path).
     val hist = df.where(v.isNotNull)
       .groupBy(v.as("__val")).agg(count(lit(1)).as("__k"))
-      .localCheckpoint()
-    val cum = histCum(hist, "__val", col("__k"), desc = false, "__cum")
-      .crossJoin(broadcast(hist.agg(sum(col("__k")).as("__n"))))
+    val cum = histCum(hist, "__val", col("__k"), desc = false, "__cum",
+      "__n")
     val aggs = qs.map { case (num, den) =>
       min(when(col("__cum") * den >= col("__n") * num, col("__val")))
         .as(cutName(num, den))
@@ -799,6 +817,10 @@ object Quantiles {
     *
     * Overflow bound: cum·20 < 2⁶³ needs total value < 4.6·10¹⁷ units.
     *
+    * Routing as in [[histogramCuts]]: a histogram Spark estimates at
+    * ≤ 2²⁰ rows stays lazy and building the frame runs no job; a larger
+    * one is checkpointed (one job) for the two-phase [[bucketedCum]].
+    *
     * @param value exact integer contribution ≥ 0 per item
     * @return (idCol, `value` under its input name, cum, abc_class)
     */
@@ -806,18 +828,15 @@ object Quantiles {
       : DataFrame = {
     val items = df.select(col(idCol), col(valueCol))
       .filter(col(valueCol).isNotNull)
-    // Histogram checkpointed once, running sum routed on its measured
-    // size (single window when small, bucketed two-phase when large —
-    // see histogramCuts); the unconditional single-partition desc
-    // window + empty-partition total window this replaces were the §2
-    // scale-killer class on high-cardinality values.
+    // Running sum routed on the histogram's estimated size (single
+    // window when small, bucketed two-phase when large — see histCum);
+    // the unconditional single-partition desc window + empty-partition
+    // total window this replaces were the §2 scale-killer class on
+    // high-cardinality values.
     val hist = items.groupBy(col(valueCol))
       .agg(count(lit(1)).as("__n"))
-      .localCheckpoint()
     val classed = histCum(hist, valueCol, col(valueCol) * col("__n"),
-        desc = true, "cum")
-      .crossJoin(broadcast(
-        hist.agg(sum(col(valueCol) * col("__n")).as("__total"))))
+        desc = true, "cum", "__total")
       .withColumn("abc_class",
         when(col("cum") * 5 <= col("__total") * 4, "A")
           .when(col("cum") * 20 <= col("__total") * 19, "B")
