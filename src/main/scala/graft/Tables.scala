@@ -5,6 +5,10 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Union}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
@@ -116,13 +120,37 @@ object Tables {
     * tax) and on the BPE train loop (per-generation persists multiply
     * the partition count into every round's task overhead). Results are
     * row-content-based everywhere (oracle-gated), so placement is free
-    * to change. */
+    * to change.
+    *
+    * Decided from the plan and never runs a job: only a NARROW plan over
+    * scans — Project, Filter and Union nodes over leaves, no subquery —
+    * is floored, and its partition count is the scans' split count,
+    * read off the planned RDD. Any other plan (a join, an aggregate, a
+    * shuffle of any kind) returns unchanged: its width is
+    * `spark.sql.shuffle.partitions` as AQE coalesces it, and asking an
+    * adaptive plan for its partitions would run its upstream stages at
+    * build time, only for the action to run them again. */
   def scanFloor(df: DataFrame): DataFrame = {
-    // streaming frames cannot be planned via .rdd (and their micro-batch
+    // streaming frames have no batch plan (and their micro-batch
     // partitioning is the source's business) — identity there, so the
     // floored operators stay usable as pure streaming projections
-    if (df.isStreaming) return df
+    if (df.isStreaming || !narrowOverScans(df.queryExecution.optimizedPlan))
+      return df
+    val plan = df.queryExecution.executedPlan
+    if (plan.isInstanceOf[AdaptiveSparkPlanExec]) return df
     val floor = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < floor) df.repartition(floor) else df
+    if (plan.execute().getNumPartitions < floor) df.repartition(floor) else df
+  }
+
+  /** Project/Filter/Union over leaves, with no subquery; a cached leaf
+    * counts only if reading it runs no job (loaded, or a plan with no
+    * exchange). */
+  private def narrowOverScans(p: LogicalPlan): Boolean = p match {
+    case _ if p.expressions.exists(SubqueryExpression.hasSubquery) => false
+    case _: Project | _: Filter | _: Union => p.children.forall(narrowOverScans)
+    case r: InMemoryRelation =>
+      r.cacheBuilder.isCachedColumnBuffersLoaded ||
+        !r.cachedPlan.isInstanceOf[AdaptiveSparkPlanExec]
+    case _ => p.children.isEmpty
   }
 }

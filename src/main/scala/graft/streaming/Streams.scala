@@ -662,12 +662,15 @@ object Streams {
       trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery = {
     val guarded = idempotentSink(markerDir) { (_, batch, epochId) =>
       val spark = batch.sparkSession
-      val v = graft.text.Curate.verdicts(batch, idCol, textCol, phrases,
+      // the four gates and the passer join all read the epoch's input:
+      // persist its (id, text) columns so the batch is read once
+      val in = batch.select(col(idCol), col(textCol)).persist()
+      val v = graft.text.Curate.verdicts(in, idCol, textCol, phrases,
         minTokens, maxMeanBitsMicro, repNs, Some(knRef)).persist()
       try {
         val passers = v.filter(col("stage").isNull)
           .select(col(idCol), col("n_tokens"))
-          .join(batch.select(col(idCol), col(textCol)), Seq(idCol))
+          .join(in, Seq(idCol))
         val history =
           if (stateDirExists(spark, historyDir))
             spark.read.parquet(historyDir).select(col("__fp"))
@@ -715,7 +718,7 @@ object Streams {
               .as("__fp"))
             .write.mode("append").parquet(historyDir)
         } finally { fresh.unpersist(); () }
-      } finally { v.unpersist(); () }
+      } finally { v.unpersist(); in.unpersist(); () }
     }
     docsStream.writeStream
       .outputMode("append")
@@ -778,12 +781,14 @@ object Streams {
     import graft.text.{Curate, Decontaminate, Scrub}
     val guarded = idempotentSink(markerDir) { (_, batch, epochId) =>
       val spark = batch.sparkSession
-      val v = Curate.verdicts(batch, idCol, textCol, phrases, minTokens,
+      // the epoch's input, read once (see curationPipelineSink)
+      val in = batch.select(col(idCol), col(textCol)).persist()
+      val v = Curate.verdicts(in, idCol, textCol, phrases, minTokens,
         maxMeanBitsMicro, repNs, Some(knRef)).persist()
       try {
         val passers = v.filter(col("stage").isNull)
           .select(col(idCol), col("n_tokens"))
-          .join(batch.select(col(idCol), col(textCol)), Seq(idCol))
+          .join(in, Seq(idCol))
         val fpHist =
           if (stateDirExists(spark, fpHistoryDir))
             spark.read.parquet(fpHistoryDir).select(col("__fp"))
@@ -906,7 +911,7 @@ object Streams {
             } finally { ndDrops.unpersist(); () }
           } finally { v67.unpersist(); () }
         } finally { fresh.unpersist(); () }
-      } finally { v.unpersist(); () }
+      } finally { v.unpersist(); in.unpersist(); () }
     }
     docsStream.writeStream
       .outputMode("append")

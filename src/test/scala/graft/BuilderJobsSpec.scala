@@ -1,12 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-
 /** Building a query runs no Spark job: every decision a builder makes
   * comes from schemas and plans, not from eager counts or checkpoints.
   * Covers the short relational mix of the interactive benchmark (the
@@ -26,51 +19,11 @@ class BuilderJobsSpec extends SparkSuite {
     "q84_decile_bin", "q88_ntile", "q225_abc_class", "q424_tpch_q1",
     "q425_tpch_q3", "q426_tpch_q5", "q438_tpch_q9")
 
-  private val GroupPrefix = "builder-jobs:"
-  private val DrainGroup = "builder-jobs-drain"
-
-  /** Jobs started per `GroupPrefix` job group. Events arrive on Spark's
-    * asynchronous listener bus, so the test runs a marker job in its own
-    * group and waits until its end has been seen — the bus is FIFO, so
-    * every earlier job start has been counted by then. */
-  private final class JobCounter extends SparkListener {
-    val jobs = new ConcurrentHashMap[String, AtomicInteger]()
-    @volatile var drained = false
-    private val drainJobs = ConcurrentHashMap.newKeySet[Int]()
-    private def group(p: java.util.Properties): String =
-      Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val g = group(e.properties)
-      if (g != null && g.startsWith(GroupPrefix))
-        jobs.computeIfAbsent(g.stripPrefix(GroupPrefix),
-          _ => new AtomicInteger).incrementAndGet()
-      if (g == DrainGroup) drainJobs.add(e.jobId)
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      if (drainJobs.contains(e.jobId)) drained = true
-  }
-
   test("building the interactive mix runs no Spark job") {
-    val sc = spark.sparkContext
     // schemas are resolved once per process (Tables); resolve them first
     tables.foreach(Tables(spark, dir)(_))
-    val counter = new JobCounter
-    sc.addSparkListener(counter)
-    try {
-      for (q <- mix) {
-        sc.setJobGroup(GroupPrefix + q, s"build $q", interruptOnCancel = false)
-        try SparkEntry.queries(q)(spark, dir)
-        finally sc.clearJobGroup()
-      }
-      sc.setJobGroup(DrainGroup, "listener drain", interruptOnCancel = false)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!counter.drained && System.currentTimeMillis() < deadline)
-        Thread.sleep(5)
-      assert(counter.drained, "listener bus did not drain")
-    } finally sc.removeSparkListener(counter)
-    val ran = counter.jobs.asScala.map { case (q, n) => q -> n.get }.toMap
+    val ran = JobGroups.started(spark)(
+      mix.map(q => q -> (() => SparkEntry.queries(q)(spark, dir))))
     assert(ran.isEmpty, s"builders ran jobs: $ran")
   }
 }

@@ -1,6 +1,16 @@
 package graft
 
+import java.net.URI
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.text.Curate
 
@@ -26,10 +36,23 @@ class CurateSpec extends SparkSuite {
 
   private val phrases = Seq("bad phrase")
 
+  /** The multi-gate entry points read their input through one
+    * materialized (doc_id, text) frame; once they return, its blocks
+    * are released and no cache entry for the input is left. */
+  private def assertInputReleased(in: DataFrame): Unit = {
+    assert(in.storageLevel == StorageLevel.NONE)
+    assert(in.select(col("doc_id"), col("text")).storageLevel ==
+      StorageLevel.NONE)
+    assert(!spark.sparkContext.getPersistentRDDs.values
+      .exists(_.name == Curate.readOnceInput))
+  }
+
   test("attrition: one doc drops at each stage, chain sums exactly") {
-    val rows = Curate.attrition(docs, "doc_id", "text", phrases,
+    val in = docs
+    val rows = Curate.attrition(in, "doc_id", "text", phrases,
         minTokens = 3L, maxMeanBitsMicro = 21000000L)
       .orderBy(col("stage_ord")).collect()
+    assertInputReleased(in)
     // (stage, docs_in, docs_dropped, tokens_in, tokens_dropped)
     // token counts: d1=10, d2=1, d3=20, d4=11, d5=10 -> 52 in
     val expected = Seq(
@@ -118,9 +141,11 @@ class CurateSpec extends SparkSuite {
   }
 
   test("attritionRelease: 9-row datasheet, chain sums exactly") {
-    val rows = Curate.attritionRelease(releaseDocs, "doc_id", "text",
+    val in = releaseDocs
+    val rows = Curate.attritionRelease(in, "doc_id", "text",
         phrases, bench, minTokens = 3L, maxMeanBitsMicro = 30000000L)
       .orderBy(col("stage_ord")).collect()
+    assertInputReleased(in)
     // tokens: d1=10 d2=1 d3=20 d4=11 d5=10 d6=17 d7=13 d8=11 -> 93
     val expected = Seq(
       ("gopher", 8L, 1L, 93L, 1L), // d2
@@ -173,6 +198,57 @@ class CurateSpec extends SparkSuite {
     assert(bNd.getLong(4) == 1L && bNd.getLong(6) == 11L)
   }
 
+  /** (stage_ord, docs_dropped) of a datasheet. */
+  private def drops(sheet: DataFrame): Seq[(Long, Long)] =
+    sheet.orderBy(col("stage_ord")).collect()
+      .map(r => r.getLong(0) -> r.getLong(3)).toSeq
+
+  test("read-once input: a cache the caller owns stays cached") {
+    val want = drops(Curate.attritionRelease(releaseDocs, "doc_id", "text",
+      phrases, bench, minTokens = 3L, maxMeanBitsMicro = 30000000L))
+    val wantGates = drops(Curate.attrition(docs, "doc_id", "text", phrases,
+      minTokens = 3L, maxMeanBitsMicro = 21000000L))
+    // the caller's cache on the input itself, and on the exact
+    // (doc_id, text) projection the entry points read
+    val whole = releaseDocs.persist()
+    val proj = releaseDocs.select(col("doc_id"), col("text")).persist()
+    val gates = docs.persist()
+    try {
+      for (in <- Seq(whole, proj)) {
+        assert(drops(Curate.attritionRelease(in, "doc_id", "text", phrases,
+          bench, minTokens = 3L, maxMeanBitsMicro = 30000000L)) == want)
+        assert(in.storageLevel != StorageLevel.NONE)
+      }
+      assert(drops(Curate.attrition(gates, "doc_id", "text", phrases,
+        minTokens = 3L, maxMeanBitsMicro = 21000000L)) == wantGates)
+      assert(gates.storageLevel != StorageLevel.NONE)
+    } finally Seq(whole, proj, gates).foreach(_.unpersist())
+  }
+
+  test("read-once input: attritionRelease scans a parquet input in no " +
+      "more stages than reading it once") {
+    val sc = spark.sparkContext
+    sc.hadoopConfiguration.set("fs.stagefs.impl",
+      classOf[StageRecordingFs].getName)
+    val dir = Files.createTempDirectory("curate-read-once").toString
+    releaseDocs.coalesce(1).write.mode("overwrite").parquet(s"$dir/docs")
+    val in = spark.read.parquet(s"stagefs://$dir/docs") // infers here
+    def scanStages(body: => Any): Set[Int] = {
+      StageRecordingFs.stages.clear()
+      body
+      StageRecordingFs.stages.asScala.map(_.intValue).toSet
+    }
+    val once = scanStages(in.write.format("noop").mode("overwrite").save())
+    assert(once.nonEmpty, "the recording file system saw no read")
+    val release = scanStages(Curate.attritionRelease(in, "doc_id", "text",
+        phrases, bench, minTokens = 3L, maxMeanBitsMicro = 30000000L)
+      .collect())
+    assert(release.size <= once.size,
+      s"input scanned in ${release.size} stages, reading it once takes " +
+        s"${once.size}")
+    assertInputReleased(in)
+  }
+
   test("verdicts: first-failing-stage attribution is the documented order") {
     val v = Curate.verdicts(docs, "doc_id", "text", phrases,
         minTokens = 3L, maxMeanBitsMicro = 21000000L)
@@ -183,4 +259,20 @@ class CurateSpec extends SparkSuite {
     assert(v(4L).contains(3))
     assert(v(5L).isEmpty) // dedup is not a verdicts-stage: stage 5 comes later
   }
+}
+
+/** The local file system under the `stagefs` scheme, recording the stage
+  * of every task that opens a file — which stages scanned an input,
+  * where task input metrics cannot tell (a cached-block read counts as
+  * input bytes too). */
+class StageRecordingFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("stagefs:///")
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    Option(TaskContext.get()).foreach(t => StageRecordingFs.stages.add(t.stageId()))
+    super.open(f, bufferSize)
+  }
+}
+
+object StageRecordingFs {
+  val stages: java.util.Set[Integer] = ConcurrentHashMap.newKeySet[Integer]()
 }

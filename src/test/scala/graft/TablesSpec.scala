@@ -133,4 +133,27 @@ class TablesSpec extends SparkSuite {
     assert(Tables(spark, d)("t").count() == 2)
     intercept[AnalysisException](Tables(spark, d)("missing"))
   }
+
+  test("scanFloor leaves a join output unchanged and runs no job") {
+    val docs = Tables(spark, small).documents
+    val joined = docs.select(col("doc_id"), col("text"))
+      .join(docs.groupBy(col("doc_id")).agg(count(lit(1)).as("n")), "doc_id")
+    var floored: DataFrame = null
+    val ran = JobGroups.started(spark)(
+      Seq("floor" -> (() => floored = Tables.scanFloor(joined))))
+    assert(ran.isEmpty, s"scanFloor ran jobs: $ran")
+    assert(floored eq joined)
+  }
+
+  test("scanFloor lifts the sf0.001 documents scan to defaultParallelism") {
+    val docs = Tables(spark, small).documents
+    val cores = spark.sparkContext.defaultParallelism
+    assert(docs.rdd.getNumPartitions < cores) // one row group
+    var floored: DataFrame = null
+    val ran = JobGroups.started(spark)(Seq("floor" -> (() =>
+      floored = Tables.scanFloor(docs.filter(col("doc_id") > 0)
+        .select(col("doc_id"), col("text"))))))
+    assert(ran.isEmpty, s"scanFloor ran jobs: $ran")
+    assert(floored.rdd.getNumPartitions == cores)
+  }
 }
