@@ -136,21 +136,19 @@ object Tables {
     // floored operators stay usable as pure streaming projections
     if (df.isStreaming || !narrowOverScans(df.queryExecution.optimizedPlan))
       return df
-    val plan = df.queryExecution.executedPlan
-    if (plan.isInstanceOf[AdaptiveSparkPlanExec]) return df
     val floor = df.sparkSession.sparkContext.defaultParallelism
-    if (plan.execute().getNumPartitions < floor) df.repartition(floor) else df
+    val width = df.queryExecution.executedPlan.execute().getNumPartitions
+    if (width < floor) df.repartition(floor) else df
   }
 
-  /** Project/Filter/Union over leaves, with no subquery; a cached leaf
-    * counts only if reading it runs no job (loaded, or a plan with no
-    * exchange). */
+  /** Project/Filter/Union over leaves, with no subquery — the plans AQE
+    * leaves unwrapped, so their width is known without running a job. A
+    * cached leaf counts only if its own plan is not adaptive: Spark
+    * wraps a scan of an adaptive cached plan in AQE too. */
   private def narrowOverScans(p: LogicalPlan): Boolean = p match {
     case _ if p.expressions.exists(SubqueryExpression.hasSubquery) => false
     case _: Project | _: Filter | _: Union => p.children.forall(narrowOverScans)
-    case r: InMemoryRelation =>
-      r.cacheBuilder.isCachedColumnBuffersLoaded ||
-        !r.cachedPlan.isInstanceOf[AdaptiveSparkPlanExec]
+    case r: InMemoryRelation => !r.cachedPlan.isInstanceOf[AdaptiveSparkPlanExec]
     case _ => p.children.isEmpty
   }
 }

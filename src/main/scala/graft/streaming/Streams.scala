@@ -662,15 +662,12 @@ object Streams {
       trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery = {
     val guarded = idempotentSink(markerDir) { (_, batch, epochId) =>
       val spark = batch.sparkSession
-      // the four gates and the passer join all read the epoch's input:
-      // persist its (id, text) columns so the batch is read once
-      val in = batch.select(col(idCol), col(textCol)).persist()
-      val v = graft.text.Curate.verdicts(in, idCol, textCol, phrases,
+      val v = graft.text.Curate.verdicts(batch, idCol, textCol, phrases,
         minTokens, maxMeanBitsMicro, repNs, Some(knRef)).persist()
       try {
         val passers = v.filter(col("stage").isNull)
           .select(col(idCol), col("n_tokens"))
-          .join(in, Seq(idCol))
+          .join(batch.select(col(idCol), col(textCol)), Seq(idCol))
         val history =
           if (stateDirExists(spark, historyDir))
             spark.read.parquet(historyDir).select(col("__fp"))
@@ -718,7 +715,7 @@ object Streams {
               .as("__fp"))
             .write.mode("append").parquet(historyDir)
         } finally { fresh.unpersist(); () }
-      } finally { v.unpersist(); in.unpersist(); () }
+      } finally { v.unpersist(); () }
     }
     docsStream.writeStream
       .outputMode("append")
@@ -781,14 +778,12 @@ object Streams {
     import graft.text.{Curate, Decontaminate, Scrub}
     val guarded = idempotentSink(markerDir) { (_, batch, epochId) =>
       val spark = batch.sparkSession
-      // the epoch's input, read once (see curationPipelineSink)
-      val in = batch.select(col(idCol), col(textCol)).persist()
-      val v = Curate.verdicts(in, idCol, textCol, phrases, minTokens,
+      val v = Curate.verdicts(batch, idCol, textCol, phrases, minTokens,
         maxMeanBitsMicro, repNs, Some(knRef)).persist()
       try {
         val passers = v.filter(col("stage").isNull)
           .select(col(idCol), col("n_tokens"))
-          .join(in, Seq(idCol))
+          .join(batch.select(col(idCol), col(textCol)), Seq(idCol))
         val fpHist =
           if (stateDirExists(spark, fpHistoryDir))
             spark.read.parquet(fpHistoryDir).select(col("__fp"))
@@ -911,7 +906,7 @@ object Streams {
             } finally { ndDrops.unpersist(); () }
           } finally { v67.unpersist(); () }
         } finally { fresh.unpersist(); () }
-      } finally { v.unpersist(); in.unpersist(); () }
+      } finally { v.unpersist(); () }
     }
     docsStream.writeStream
       .outputMode("append")

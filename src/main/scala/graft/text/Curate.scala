@@ -3,7 +3,6 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.dedup.NearDup
 import graft.functions.Hash64
@@ -33,13 +32,18 @@ import graft.ops.Sampling
   *    after AQE), the dedup is ONE fingerprint-keyed aggregation, and
   *    the attrition readout is one 6-group aggregation plus a window
   *    over the 6-row stage frame.
-  *  Nothing is ever all-pairs and no stage materializes the corpus.
+  *  Nothing is ever all-pairs, and no gate materializes the corpus.
   *
   * READ-ONCE INPUT: the multi-gate entry points ([[attrition]],
-  * [[attritionBySource]], [[releaseVerdicts]]) read `docs` through ONE
-  * materialized `(idCol, textCol)` frame ([[withInputOnce]]), so a lazy
-  * input — a union of planted branches over a parquet scan — is scanned
-  * and planned once instead of once per gate.
+  * [[attritionBySource]], [[releaseVerdicts]]) DO materialize the
+  * corpus' `(idCol, textCol)` columns, once, and read `docs` through
+  * that one frame ([[withInputOnce]]), so a lazy input — a union of
+  * planted branches over a parquet scan — is scanned and planned once
+  * instead of once per gate. The price: every document's text sits in
+  * executor block storage until the entry point has read it for the
+  * last time, and the frame is a `localCheckpoint`, so it gives up
+  * lineage recovery — an executor lost mid-call fails the query on the
+  * missing blocks instead of re-reading the input.
   *
   * Token accounting uses the gate family's own unit
   * ([[TextAnalysis.tokens]]); stage codes are stable public contract:
@@ -166,15 +170,13 @@ object Curate {
     * measured 2–3 s slower that way (sf0.001, 4 cores).
     * The cut's blocks are released when `body` returns, so `body` must
     * finish every read of its argument — end in an eager checkpoint, or
-    * return a frame that no longer reads it. A cache the caller owns
-    * (on `docs` or on the projection) is read as is and never released.
-    * Results are unchanged: the gates see the same rows either way. */
+    * return a frame that no longer reads it. Releasing the cut touches
+    * only its own blocks, so a cache the caller put on `docs` (which the
+    * cut reads) stays cached. Results are unchanged: the gates see the
+    * same rows either way. */
   private def withInputOnce[T](docs: DataFrame, idCol: String,
       textCol: String)(body: DataFrame => T): T = {
-    val in = docs.select(col(idCol), col(textCol))
-    if (docs.storageLevel != StorageLevel.NONE ||
-        in.storageLevel != StorageLevel.NONE) return body(in)
-    val cut = in.localCheckpoint()
+    val cut = docs.select(col(idCol), col(textCol)).localCheckpoint()
     val blocks = cut.queryExecution.logical.collectFirst {
       case r: LogicalRDD => r.rdd.setName(readOnceInput)
     }
@@ -446,7 +448,7 @@ object Curate {
     * the CC loop, the last reader of the input: the returned frame
     * reads only the checkpointed stage-≤7 verdicts and CC labels, so no
     * caller cache contract is needed. A cache the caller put on `docs`
-    * is read as is and left in place.
+    * feeds the cut and is left in place.
     *
     * @param benchmark evaluation set to decontaminate against
     *        (idCol, textCol)

@@ -145,6 +145,22 @@ class TablesSpec extends SparkSuite {
     assert(floored eq joined)
   }
 
+  test("scanFloor leaves a read of an unbuilt cached aggregate unchanged " +
+      "and runs no job") {
+    val docs = Tables(spark, small).documents
+    // not yet built: planning a read of it under AQE would build it
+    val agg = docs.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+      .persist()
+    try {
+      val narrow = agg.filter(col("n") > 0).select(col("doc_id"))
+      var floored: DataFrame = null
+      val ran = JobGroups.started(spark)(
+        Seq("floor" -> (() => floored = Tables.scanFloor(narrow))))
+      assert(ran.isEmpty, s"scanFloor ran jobs: $ran")
+      assert(floored eq narrow)
+    } finally { agg.unpersist(); () }
+  }
+
   test("scanFloor lifts the sf0.001 documents scan to defaultParallelism") {
     val docs = Tables(spark, small).documents
     val cores = spark.sparkContext.defaultParallelism
