@@ -471,10 +471,10 @@ object ScaleProbe {
           text.Bpe.byteFallbackSymbols).count()
       }
       // round-11 item 6: the MERGES axis — training cost across two
-      // orders of magnitude of merge count at FIXED 1x corpus (one
-      // pair-count job + one persisted rewrite per merge, lineage cut
-      // every 32, so the curve must be at-or-below linear in merges —
-      // sub-linear in practice as merges shrink the symbol stream).
+      // orders of magnitude of merge count at FIXED 1x corpus. The
+      // Spark side (seed + distinct-state collect) does not depend on
+      // the merge count; only the in-driver merge loop grows with it,
+      // so the curve should stay near flat.
       // Runs only at m=1: the corpus axis is the families above.
       if (m == 1) {
         val mergeDocs = t.documents

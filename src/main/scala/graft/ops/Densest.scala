@@ -64,13 +64,18 @@ object Densest {
           .filter(col("d") * col("__v") * epsDen >
             lit(epsDen + epsNum) * col("__e2"))
           .select(col("node"))
-        e = e.join(surv.withColumnRenamed("node", "u"), Seq("u"),
+        val next = e.join(surv.withColumnRenamed("node", "u"), Seq("u"),
             "left_semi")
           .join(surv.withColumnRenamed("node", "v"), Seq("v"),
             "left_semi")
           .localCheckpoint()
+        Cuts.release(e)
+        e = next
       }
     }
+    // every deg has materialized, and the lazy trace rows read only the
+    // degs, so the last edge generation can go too
+    Cuts.release(e)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("density").desc, col("round"))
     traces.reduce(_ unionAll _)

@@ -317,15 +317,19 @@ object PageRank {
       .localCheckpoint()
     var auth = nodes.withColumn("a", lit(scale))
     var hub: DataFrame = null
-    (1 to iters).foreach { _ =>
+    (1 to iters).foreach { r =>
       val hRaw = e.join(auth.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node")).agg(sum(col("a")).as("hs"))
       val hMax = hRaw.agg(max(col("hs")).as("hmax"))
-      hub = nodes.join(hRaw, Seq("node"), "left")
+      val nextHub = nodes.join(hRaw, Seq("node"), "left")
         .crossJoin(broadcast(hMax))
         .select(col("node"),
           expr(s"(coalesce(hs, 0L) * $scale) div hmax").as("h"))
         .localCheckpoint()
+      // the previous auth was read only by nextHub, the previous hub
+      // only by that auth (round 1's auth is a lazy projection of nodes)
+      if (r > 1) { Cuts.release(auth); Cuts.release(hub) }
+      hub = nextHub
       val aRaw = e.join(hub.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node")).agg(sum(col("h")).as("as_"))
       val aMax = aRaw.agg(max(col("as_")).as("amax"))
@@ -335,6 +339,9 @@ object PageRank {
           expr(s"(coalesce(as_, 0L) * $scale) div amax").as("a"))
         .localCheckpoint()
     }
+    // the readout reads only the last hub and auth
+    Cuts.release(e)
+    Cuts.release(nodes)
     hub.join(auth, "node")
       .select(col("node"), col("h").as("hub_q"), col("a").as("auth_q"),
         (col("h").cast("double") / lit(scale.toDouble)).as("hub"),

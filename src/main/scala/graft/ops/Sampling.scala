@@ -393,7 +393,7 @@ object Sampling {
       val rem = st.agg(
         sum(when(col("capped"), col("avail")).otherwise(0L)).as("__used"),
         sum(when(!col("capped"), col("wn")).otherwise(0L)).as("__remw"))
-      st = st.drop("demand").crossJoin(broadcast(rem))
+      val next = st.drop("demand").crossJoin(broadcast(rem))
         .withColumn("demand",
           when(col("capped"), col("avail"))
             .when(col("__remw") > 0,
@@ -403,6 +403,8 @@ object Sampling {
         .select(col(srcCol), col("avail"), col("wn"), col("__b"),
           col("capped"), col("demand"))
         .localCheckpoint()
+      Cuts.release(st)
+      st = next
     }
     st.select(col(srcCol), col("avail"), col("wn"),
       col("capped").cast("long").as("capped"),

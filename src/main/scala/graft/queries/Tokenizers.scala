@@ -82,9 +82,10 @@ object Tokenizers extends QueryModule {
       graft.text.Spans.topBigrams(Tables(s, dir).documents,
         "doc_id", "text", topN = 20)),
 
-    // BPE training: 16 merges, each round = pair count + 1-row argmax +
-    // per-row greedy replace; deterministic (freq desc, pair asc)
-    // tie-breaks. q92 is one step of this loop.
+    // BPE training: 16 merges from one Spark query (the distinct seed
+    // states with their multiplicities, collected under a bound) and an
+    // in-driver merge loop; deterministic (freq desc, pair asc)
+    // tie-breaks. q92 is one step of this loop, run in Spark.
     "q110_bpe_train" -> ((s, dir) =>
       graft.text.Bpe.train(Tables(s, dir).documents,
         "doc_id", "text", nMerges = bpeNMerges)),

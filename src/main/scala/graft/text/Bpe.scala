@@ -1,7 +1,10 @@
 package graft.text
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** BPE tokenizer training + application (Sennrich et al. 2016
   * semantics, at whole-token granularity): iterate [[Spans.topBigrams]]'s
@@ -33,17 +36,22 @@ import org.apache.spark.sql.functions._
   *  - adjacent candidate matches OVERLAP only in the zero chars BETWEEN
   *    enclosures, so non-overlapping sequential replace implements
   *    exactly the greedy left-to-right merge BPE specifies (`a a a`
-  *    under merge (a,a) → `[a a, a]`), identically in Spark and DuckDB;
+  *    under merge (a,a) → `[a a, a]`), identically in Spark and DuckDB
+  *    (the driver-side trainer's greedy scan over symbol arrays is the
+  *    same merge);
   *  - no regex, no lookbehind (RE2-safe), codegen-friendly.
   *
-  * Scale contract: each merge round is one map-side-combined pair count
-  * (the q92 plan) + a 1-ROW argmax collect (contract-bounded driver
-  * round-trip, the [[graft.similarity.IVF]] idiom) + one per-row
-  * replace. Generations persist one-deep (previous unpersisted once the
-  * next is materialized), so lineage and storage stay O(1). At 100 TB
-  * one trains on a sample ([[graft.ops.Sampling.stratifiedSample]] —
-  * pair statistics converge long before corpus scale) and ENCODES the
-  * full corpus: encode is a pure per-row replace chain, zero shuffles.
+  * Scale contract: training is ONE Spark query — the seed per row, then
+  * a (distinct symbol array, multiplicity) aggregate collected to the
+  * driver under [[Bpe.MaxTrainStates]] — plus an in-driver merge loop
+  * over that table, so the job count does not grow with the merge
+  * count. The driver holds the distinct states; a corpus with more
+  * than the bound fails fast instead of being sampled silently. At
+  * 100 TB one trains on a bounded sample
+  * ([[graft.ops.Sampling.stratifiedSample]] — pair statistics converge
+  * long before corpus scale; SentencePiece's `input_sentence_size`
+  * contract) and ENCODES the full corpus: encode is a pure per-row
+  * replace chain, zero shuffles.
   */
 object Bpe {
 
@@ -210,63 +218,138 @@ object Bpe {
     replace(state, lit(SEP + a + SEP + SEP + b + SEP),
       lit(SEP + a + " " + b + SEP))
 
+  /** Most distinct seed states [[trainMerges]] collects to the driver
+    * (SentencePiece's `input_sentence_size` default). A corpus with more
+    * fails fast; it is never sampled silently. */
+  val MaxTrainStates: Int = 1000000
+
   /** Train `nMerges` BPE merges: @return (rank, left_sym, right_sym,
     * freq) in learning order, rank 1-based. Ties on pair frequency break
-    * (left, right) ascending — binary string compare, identical in both
-    * engines, so "the merge to apply next" is deterministic. Stops early
-    * (fewer rows) if the corpus runs out of adjacent pairs. */
+    * (left, right) ascending — UTF-8 binary string compare, the order
+    * Spark's `orderBy` and DuckDB's `ORDER BY` both use, so "the merge to
+    * apply next" is deterministic. Stops early (fewer rows) if the
+    * corpus runs out of adjacent pairs.
+    *
+    * ONE Spark query, whatever `nMerges` is: the seed runs per row,
+    * documents with fewer than 2 symbols drop, and the rest group to a
+    * (distinct symbol array, multiplicity) table that is collected under
+    * [[MaxTrainStates]]; the merge loop then runs in the driver over that
+    * table ([[learnMerges]]). Above the bound the call fails and names
+    * [[graft.ops.Sampling.stratifiedSample]]: at scale one trains on a
+    * bounded sample and encodes the full corpus. `idCol` is not read. */
   def trainMerges(docs: DataFrame, idCol: String, textCol: String,
       nMerges: Int,
-      seed: Column => Column = TextAnalysis.tokens): Seq[(Long, String, String, Long)] = {
+      seed: Column => Column = TextAnalysis.tokens): Seq[(Long, String, String, Long)] =
+    trainMergesWithin(docs, textCol, nMerges, seed, MaxTrainStates)
+
+  /** [[trainMerges]] with the state bound as a parameter. */
+  private[text] def trainMergesWithin(docs: DataFrame, textCol: String,
+      nMerges: Int, seed: Column => Column,
+      maxStates: Int): Seq[(Long, String, String, Long)] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var state = docs.select(col(idCol),
-      stateOf(seed(col(textCol))).as("state")).persist()
-    var prev: DataFrame = null
-    var exhausted = false
-    var i = 1
-    while (i <= nMerges && !exhausted) {
-      val syms = state.select(symbolsOf(col("state")).as("syms"))
-        .filter(size(col("syms")) >= 2)
-      val n = size(col("syms"))
-      val top = syms
-        .select(explode(zip_with(
-          slice(col("syms"), lit(1), n - 1),
-          slice(col("syms"), lit(2), n - 1),
-          (a, b) => struct(a.as("a"), b.as("b")))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("a"), col("b"))
-        .limit(1).collect()
-      // the pair-count job above also materialized `state`, so the
-      // generation BEHIND it is safe to drop now
-      if (prev != null) { prev.unpersist(); () }
-      if (top.isEmpty) exhausted = true
+    val states = docs
+      .select(symbolsOf(stateOf(seed(col(textCol)))).as("syms"))
+      .filter(size(col("syms")) >= 2)
+      .groupBy(col("syms")).agg(count(lit(1)).as("n"))
+      .limit(maxStates + 1).collect()
+    require(states.length <= maxStates,
+      s"BPE training collects at most $maxStates distinct seed states " +
+        "to the driver and this corpus has more: train on a bounded " +
+        "sample (graft.ops.Sampling.stratifiedSample) and encode the " +
+        "full corpus with Bpe.encode")
+    learnMerges(states.toIndexedSeq.map(r => (r.getSeq[String](0), r.getLong(1))),
+      nMerges)
+  }
+
+  /** The merge recurrence over (symbol sequence, multiplicity) states,
+    * in the driver: each round takes the most frequent adjacent pair
+    * (counts weighted by multiplicity; ties (left, right) ascending in
+    * [[UTF8String]] order) and merges it in every state, greedy left to
+    * right without overlap — exactly the `␁a␁␁b␁` → `␁a b␁` replace, so
+    * `a a a` under (a,a) becomes `[a a, a]`. Symbols are interned to
+    * ints; pair counts update incrementally from the states that held
+    * the merged pair, and a lazily invalidated heap yields each round's
+    * argmax. Symbols must be non-empty and free of `\u0001` (the
+    * [[encode]] representation's own contract). */
+  private[text] def learnMerges(states: Seq[(Seq[String], Long)],
+      nMerges: Int): Seq[(Long, String, String, Long)] = {
+    val ids = mutable.HashMap.empty[String, Int]
+    val names = mutable.ArrayBuffer.empty[String]
+    val utf8 = mutable.ArrayBuffer.empty[UTF8String]
+    def intern(s: String): Int = ids.getOrElseUpdate(s, {
+      names += s; utf8 += UTF8String.fromString(s); names.length - 1 })
+    val words: Array[Array[Int]] = states.map(_._1.map(intern).toArray).toArray
+    val mult: Array[Long] = states.map(_._2).toArray
+
+    def key(a: Int, b: Int): Long = (a.toLong << 32) | b.toLong
+    val counts = mutable.LongMap.empty[Long]
+    // the states that gained a pair since it was last merged; may repeat
+    // a state and may name one that has lost the pair since
+    val holders = mutable.LongMap.empty[mutable.ArrayBuffer[Int]]
+    // heap entries go stale when a count moves: a popped entry is live
+    // only if its freq is still the pair's count
+    final class Cand(val freq: Long, val a: Int, val b: Int)
+    val heap = new java.util.PriorityQueue[Cand]((x: Cand, y: Cand) => {
+      val f = java.lang.Long.compare(y.freq, x.freq)
+      if (f != 0) f
       else {
-        val (a, b, f) =
-          (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
-        merges += ((i.toLong, a, b, f))
-        prev = state
-        state = state
-          .withColumn("state", applyMerge(col("state"), a, b)).persist()
-        // lineage truncation every 32 rounds (the q401 lesson on the
-        // MERGES axis): without it the plan nests one Project per
-        // learned merge and task serialization stack-overflows near
-        // ~250 merges — realistic vocabularies (512+) need the cut.
-        // The checkpoint materializes from `prev` (still pinned), then
-        // the lazy persisted generation behind it is dropped.
-        if (i % 32 == 0) {
-          val cp = state.localCheckpoint()
-          state.unpersist()
-          state = cp
-        }
-        i += 1
+        val l = utf8(x.a).compareTo(utf8(y.a))
+        if (l != 0) l else utf8(x.b).compareTo(utf8(y.b))
+      }
+    })
+    val touched = mutable.LongMap.empty[Unit]
+    def addPairs(w: Int, sign: Long): Unit = {
+      val s = words(w)
+      var j = 0
+      while (j + 1 < s.length) {
+        val k = key(s(j), s(j + 1))
+        val c = counts.getOrElse(k, 0L) + sign * mult(w)
+        if (c == 0L) counts.remove(k) else counts.update(k, c)
+        if (sign > 0)
+          holders.getOrElseUpdate(k, mutable.ArrayBuffer.empty[Int]) += w
+        touched.update(k, ())
+        j += 1
       }
     }
-    // normal loop exit leaves TWO pinned generations: `state` and the
-    // `prev` behind it (the early-stop path already dropped prev)
-    if (prev != null && !(prev eq state)) { prev.unpersist(); () }
-    state.unpersist()
+    def pushTouched(): Unit = {
+      touched.foreachKey { k =>
+        counts.get(k).foreach(c =>
+          heap.add(new Cand(c, (k >>> 32).toInt, k.toInt)))
+      }
+      touched.clear()
+    }
+    words.indices.foreach(addPairs(_, 1L))
+    pushTouched()
+
+    val merges = mutable.ArrayBuffer.empty[(Long, String, String, Long)]
+    val seen = Array.fill(words.length)(0)
+    while (merges.length < nMerges && !heap.isEmpty) {
+      val top = heap.poll()
+      val k = key(top.a, top.b)
+      if (counts.get(k).contains(top.freq)) {
+        val rank = merges.length + 1
+        merges += ((rank.toLong, names(top.a), names(top.b), top.freq))
+        val ab = intern(names(top.a) + " " + names(top.b))
+        for (w <- holders.remove(k).getOrElse(Nil) if seen(w) != rank) {
+          seen(w) = rank
+          val s = words(w)
+          val out = mutable.ArrayBuilder.make[Int]
+          var j = 0
+          while (j < s.length) {
+            if (j + 1 < s.length && s(j) == top.a && s(j + 1) == top.b) {
+              out += ab; j += 2
+            } else { out += s(j); j += 1 }
+          }
+          val merged = out.result()
+          if (merged.length != s.length) {
+            addPairs(w, -1L)
+            words(w) = merged
+            addPairs(w, 1L)
+          }
+        }
+        pushTouched()
+      }
+    }
     merges.toSeq
   }
 
@@ -291,8 +374,8 @@ object Bpe {
     * fused expression (the historical plan shape, codegen'd); larger
     * vocabularies apply in 64-merge chunks with a lineage cut between
     * chunks (CollapseProject would otherwise re-fuse the chain into a
-    * single ~512-deep expression and stack-overflow serialization —
-    * the trainMerges hazard on the encode side), still scan-bound. */
+    * single ~512-deep expression, and task serialization
+    * stack-overflows near ~250 merges), still scan-bound. */
   def encode(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)],
       seed: Column => Column = TextAnalysis.tokens): DataFrame = {
@@ -348,7 +431,7 @@ object Bpe {
     * (sub)corpus, the learned tables then apply in rank order to
     * `encodeTokSql`'s (full) corpus. A merge round that found no pair
     * on the sample leaves every state unchanged on both chains (the
-    * LEFT-JOIN coalesce), mirroring the Spark loop's early stop. */
+    * LEFT-JOIN coalesce), mirroring the trainer's early stop. */
   def encodeSampledOracleSql(trainTokSql: String, encodeTokSql: String,
       nMerges: Int): String = {
     val encSteps = (1 to nMerges).map { i =>
@@ -383,8 +466,8 @@ object Bpe {
 
   /** The shared replay: s0 → (pair count → 1-row argmax → replace) × N.
     * The LEFT JOIN ON TRUE keeps state unchanged if a round finds no
-    * pairs (coalesce of the NULL-pattern replace), mirroring the Spark
-    * loop's early stop. */
+    * pairs (coalesce of the NULL-pattern replace), mirroring the trainer's
+    * early stop. */
   private def replayCtes(tokSql: String, nMerges: Int): String = {
     val steps = (1 to nMerges).map { i =>
       s"""sy${i - 1} AS (

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.NearDup
 import graft.functions.Hash64
-import graft.ops.Sampling
+import graft.ops.{Cuts, Sampling}
 
 /** The ONE-PLAN curation pipeline (round-9 item 3) — the round-8 gates
   * composed the way [[Corpus.build]] composed sampling + dedup + split:
@@ -177,10 +177,10 @@ object Curate {
   private def withInputOnce[T](docs: DataFrame, idCol: String,
       textCol: String)(body: DataFrame => T): T = {
     val cut = docs.select(col(idCol), col(textCol)).localCheckpoint()
-    val blocks = cut.queryExecution.logical.collectFirst {
+    cut.queryExecution.logical.collectFirst {
       case r: LogicalRDD => r.rdd.setName(readOnceInput)
     }
-    try body(cut) finally blocks.foreach(_.unpersist(blocking = false))
+    try body(cut) finally Cuts.release(cut)
   }
 
   /** Storage name of [[withInputOnce]]'s cut while it is held. */

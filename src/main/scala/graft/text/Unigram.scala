@@ -85,8 +85,10 @@ object Unigram {
   }
 
   /** [[trainPieces]] collected to the literal vocabulary the scoring
-    * stage embeds — contract-bounded (≤ topN + |alphabet| rows, the
-    * [[Bpe.trainMerges]] idiom). @return (piece, cost) */
+    * stage embeds — contract-bounded (≤ topN + |alphabet| rows: a
+    * driver collect whose size the contract fixes, as
+    * [[Bpe.trainMerges]] collects at most [[Bpe.MaxTrainStates]]
+    * states). @return (piece, cost) */
   def collectPieces(pieces: DataFrame): Seq[(String, Long)] =
     pieces.select(col("piece"), col("cost")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
