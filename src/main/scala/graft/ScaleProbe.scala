@@ -149,14 +149,16 @@ object ScaleProbe {
       }
       emb.unpersist()
 
-      // connected components over a synthetic chain+clique edge set that
-      // grows with m (tests the O(log diameter) loop, not the pipeline)
+      // connected components over a synthetic chain edge set that grows
+      // with m (tests the O(log diameter) loop, not the pipeline): bound
+      // 0 keeps it off the driver route a chain this size would take
       import spark.implicits._
       val nNodes = 20000 * m
       val edges = spark.range(1, nNodes)
         .select((col("id") - 1).as("d1"), col("id").as("d2")) // one long chain
       time(s"connected_components_x$m") {
-        dedup.NearDup.connectedComponents(edges.toDF()).count()
+        dedup.NearDup.connectedComponentsWithin(edges.toDF(), "d1", "d2",
+          maxIter = 50, maxDriverEdges = 0).count()
       }
 
       val docs2 = replicate(t.documents, "doc_id", m).persist()

@@ -1,9 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.Hash64
+import graft.ops.Cuts
 import graft.text.TextAnalysis
 
 /** Near-duplicate detection: MinHash+LSH, SimHash, token-set Jaccard.
@@ -592,18 +594,40 @@ object NearDup {
           .reduce(_ + _).as("simhash"))
   }
 
+  /** Most edges [[connectedComponents]] resolves in the driver; a graph
+    * with more runs the distributed loop. */
+  val MaxDriverEdges: Int = 1000000
+
   /** Resolve near-dup PAIRS into duplicate CLUSTERS — the step between
     * candidate pairs and "keep one copy" that a training-data dedup
-    * actually executes. Connected components by iterative min-label
-    * propagation: every node's label converges to the smallest node id
-    * reachable from it, giving (node, cluster_id, keep = node is the
-    * cluster's representative) for every node that appears in an edge.
+    * actually executes. Connected components: every node's label is the
+    * smallest node id reachable from it, giving (node, cluster_id,
+    * keep = node is the cluster's representative) for every node that
+    * appears in an edge.
     *
-    * Scale shape: each round propagates neighbor labels (keyed edge⋈label
-    * join + map-side-combinable min aggregation) and then POINTER-DOUBLES
-    * (label-of-label shortcut join), so reachable-path lengths square per
-    * round: convergence is O(log diameter) rounds, not O(diameter) — a
-    * 10,000-link chain resolves in ~14 rounds.
+    * Route: the (src, dst) projection of `edges` is persisted — the one
+    * read of the caller's edge lineage on either route — and collected
+    * under [[MaxDriverEdges]] (`limit(bound + 1)`, one eager query).
+    * Within the bound, with `Int` or `Long` ids on both ends and no null
+    * endpoint, the driver runs union-find over primitive arrays (ids
+    * sorted and deduplicated into dense indices; the root of each set is
+    * its minimum id) and returns the labels as a local frame of the
+    * input's id type. At the bound the driver holds the collected rows
+    * while it copies them to arrays, and the returned plan ~40 bytes a
+    * node. Otherwise the distributed loop below runs over the persisted
+    * projection. Both routes give the same rows, the min-reachable-id
+    * fixpoint (`maxIter` bounds only the loop, which reaches it in
+    * O(log diameter) rounds). It collects the projection, not the
+    * symmetric frame: the symmetric union reads its input twice, and
+    * over an unpersisted lineage that re-ran the caller's shuffles (q72:
+    * 18 Spark jobs to collect the symmetric frame, 11 the projection).
+    *
+    * Distributed loop (Kiveris et al., SoCC 2014): each round propagates
+    * neighbor labels (keyed edge⋈label join + map-side-combinable min
+    * aggregation) and then POINTER-DOUBLES (label-of-label shortcut
+    * join), so reachable-path lengths square per round: convergence is
+    * O(log diameter) rounds, not O(diameter) — a 10,000-link chain
+    * resolves in ~14 rounds.
     *
     * Iteration hygiene (the part naive loops get wrong): every generation
     * is `localCheckpoint`ed, truncating lineage to a leaf. Without that,
@@ -611,18 +635,87 @@ object NearDup {
     * + both shortcut-join arms) — 3^k plan nodes — and driver-side
     * Catalyst analysis goes exponential even when every parent is cached
     * (measured: 187 s in round 2 on a 477-node graph). The driver loop
-    * runs one tiny convergence count per round; superseded generations
-    * are left to the ContextCleaner.
+    * runs one tiny convergence count per round, and each superseded
+    * generation is released once its successor has materialized; the
+    * result reads only the last one.
     *
     * Deterministic fixpoint (min reachable id) regardless of iteration
     * order — the DuckDB oracle recomputes it with a recursive CTE (q37). */
   def connectedComponents(edges: DataFrame, srcCol: String = "d1",
-      dstCol: String = "d2", maxIter: Int = 50): DataFrame = {
-    val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .unionAll(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
+      dstCol: String = "d2", maxIter: Int = 50): DataFrame =
+    connectedComponentsWithin(edges, srcCol, dstCol, maxIter, MaxDriverEdges)
+
+  /** [[connectedComponents]] with the driver bound as a parameter: 0
+    * forces the distributed loop on any non-empty graph. */
+  private[graft] def connectedComponentsWithin(edges: DataFrame,
+      srcCol: String, dstCol: String, maxIter: Int,
+      maxDriverEdges: Int): DataFrame = {
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .persist()
+    val (s, d) = (e.schema("src"), e.schema("dst"))
+    val integral = s.dataType == d.dataType &&
+      (s.dataType == IntegerType || s.dataType == LongType)
+    val rows =
+      if (integral) e.limit(maxDriverEdges + 1).collect() else Array.empty[Row]
+    val labels =
+      if (integral && rows.length <= maxDriverEdges &&
+          !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+        unionFindLabels(e.sparkSession, rows, s.dataType,
+          nodeNullable = s.nullable || d.nullable)
+      else labelLoop(e, maxIter)
+    e.unpersist()
+    labels
+  }
+
+  /** The driver route of [[connectedComponentsWithin]] over the collected
+    * (src, dst) rows, none null. */
+  private def unionFindLabels(spark: SparkSession, rows: Array[Row],
+      idType: DataType, nodeNullable: Boolean): DataFrame = {
+    val isInt = idType == IntegerType
+    def id(r: Row, i: Int): Long = if (isInt) r.getInt(i).toLong else r.getLong(i)
+    val src = rows.map(id(_, 0))
+    val dst = rows.map(id(_, 1))
+    val ids = src ++ dst
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices if i == 0 || ids(i) != ids(i - 1)) {
+      ids(n) = ids(i); n += 1
+    }
+    def index(v: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, v)
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (k <- src.indices) {
+      val a = find(index(src(k)))
+      val b = find(index(dst(k)))
+      // dense indices follow id order, so the smaller root is the min id
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val out = new java.util.ArrayList[Row](n)
+    for (i <- 0 until n) {
+      val r = find(i)
+      out.add(if (isInt) Row(ids(i).toInt, ids(r).toInt, r == i)
+        else Row(ids(i), ids(r), r == i))
+    }
+    // the loop's schema: min() and the keep comparison are nullable
+    spark.createDataFrame(out, StructType(Seq(
+      StructField("node", idType, nodeNullable),
+      StructField("cluster_id", idType, nullable = true),
+      StructField("keep", BooleanType, nullable = true))))
+  }
+
+  /** The distributed route of [[connectedComponentsWithin]]: min-label
+    * propagation with pointer doubling over the symmetric closure of the
+    * (src, dst) edges `e`. */
+  private def labelLoop(e: DataFrame, maxIter: Int): DataFrame = {
+    val sym = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist()
-    var labels = sym.select(col("src").as("node")).distinct()
+    var cut = sym.select(col("src").as("node")).distinct()
       .withColumn("lab", col("node")).localCheckpoint()
+    var labels = cut
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
@@ -648,6 +741,8 @@ object NearDup {
       val next = prop.unionAll(shortcut)
         .groupBy(col("node")).agg(min(col("lab")).as("lab"),
           max(col("old")).as("old")).localCheckpoint()
+      Cuts.release(cut)
+      cut = next
       changed = next.filter(col("lab") < col("old")).count()
       labels = next.select(col("node"), col("lab"))
       iter += 1

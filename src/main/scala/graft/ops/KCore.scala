@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   * generation is `localCheckpoint`ed: the edge frame feeds four plan
   * arms per round (both degree-union legs + both semi-join probes), so
   * un-truncated lineage would grow ~4^rounds plan nodes and stall
-  * driver-side analysis (the measured CC failure mode — see
-  * [[graft.dedup.NearDup.connectedComponents]]).
+  * driver-side analysis (the failure mode measured on the distributed
+  * loop of [[graft.dedup.NearDup.connectedComponents]]).
   */
 object KCore {
 

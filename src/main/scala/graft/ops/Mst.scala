@@ -23,10 +23,11 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: one component-labeling join pair, one keyed
   * min-aggregation (map-side combinable struct-min), and a component
   * re-resolution via [[graft.dedup.NearDup.connectedComponents]]
-  * (pointer doubling, lineage-truncated). Rounds are driver-bounded
+  * (union-find in the driver while the ≤ n−1 MST edges fit its bound,
+  * else pointer doubling, lineage-truncated). Rounds are driver-bounded
   * with an early exit when no cross-component edge remains (a 1-row
-  * count, the contract-bounded BPE idiom). Nothing is ever collected;
-  * candidate MST edges stay a frame of ≤ n−1 rows.
+  * count, the contract-bounded BPE idiom). Candidate MST edges stay a
+  * frame; only that bounded re-resolution collects.
   */
 object Mst {
 

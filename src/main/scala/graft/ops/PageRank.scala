@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * degree frame are computed once. Iterations are few and each
   * generation references the previous exactly once, so the logical plan
   * grows linearly — no checkpoint needed (contrast
-  * [[graft.dedup.NearDup.connectedComponents]], whose 3-way
-  * self-reference forces per-round lineage truncation).
+  * [[graft.dedup.NearDup.connectedComponents]]' distributed loop,
+  * whose 3-way self-reference forces per-round lineage truncation).
   */
 object PageRank {
 
@@ -124,7 +124,8 @@ object PageRank {
   /** Synchronous label propagation — community detection, the
     * modularity-flavored sibling of
     * [[graft.dedup.NearDup.connectedComponents]]: CC fuses anything
-    * reachable; LPA keeps weakly-bridged regions apart because labels
+    * reachable (a fixpoint, resolved in the driver when the graph is
+    * small); LPA keeps weakly-bridged regions apart because labels
     * advance by NEIGHBOR MAJORITY, not mere reachability. The classic
     * async sweep is visit-order-dependent (useless for reproducible
     * pipelines); this is the synchronous variant with a TOTAL tie-break

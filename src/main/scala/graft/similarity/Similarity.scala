@@ -327,8 +327,9 @@ object Similarity {
     * by cell, so candidate cost is Σ|cell|² not n² — the clustering is
     * exactly what makes pairwise cosine tractable (with balanced cells,
     * n²/C pairs; size `cents` so cells fit the budget). Group resolution
-    * is [[graft.dedup.NearDup.connectedComponents]] (pointer-doubling,
-    * O(log diameter) rounds); representatives are min-id (`keep`) — feed
+    * is [[graft.dedup.NearDup.connectedComponents]] (union-find in the
+    * driver below its edge bound, else pointer doubling in O(log
+    * diameter) rounds); representatives are min-id (`keep`) — feed
     * the output to [[graft.dedup.NearDup.clusterRepresentatives]] for a
     * quality-scored pick instead.
     *

@@ -840,7 +840,8 @@ object Streams {
                 col("sig").as("__s2")), "d2")
               .filter(agree(col("__s1"), col("__s2")) >= lit(minAgree16))
               .select(col("d1"), col("d2"))
-            val clusters = NearDup.connectedComponents(pairs) // eager CC
+            // eager: collected under the driver bound, else cut per round
+            val clusters = NearDup.connectedComponents(pairs)
             val taintedClusters = clusters
               .join(histHits.withColumnRenamed("__nid", "node"), Seq("node"))
               .select(col("cluster_id")).distinct()

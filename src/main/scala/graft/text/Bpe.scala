@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.ops.Cuts
+
 /** BPE tokenizer training + application (Sennrich et al. 2016
   * semantics, at whole-token granularity): iterate [[Spans.topBigrams]]'s
   * one merge step to N merges — each round counts adjacent symbol pairs
@@ -375,7 +377,8 @@ object Bpe {
     * vocabularies apply in 64-merge chunks with a lineage cut between
     * chunks (CollapseProject would otherwise re-fuse the chain into a
     * single ~512-deep expression, and task serialization
-    * stack-overflows near ~250 merges), still scan-bound. */
+    * stack-overflows near ~250 merges), still scan-bound; each chunk's
+    * cut is released once the next chunk's cut exists. */
   def encode(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)],
       seed: Column => Column = TextAnalysis.tokens): DataFrame = {
@@ -391,9 +394,11 @@ object Bpe {
           stateOf(seed(col(textCol))).as("__st"))
         val mergedDf = merges.grouped(chunkSize).foldLeft(st0) {
           (df, grp) =>
-            df.withColumn("__st", grp.foldLeft(col("__st")) {
+            val cut = df.withColumn("__st", grp.foldLeft(col("__st")) {
               case (st, (a, b)) => applyMerge(st, a, b)
             }).localCheckpoint()
+            if (df ne st0) Cuts.release(df)
+            cut
         }
         mergedDf.select(col(idCol), symbolsOf(col("__st")).as("__syms"))
       }

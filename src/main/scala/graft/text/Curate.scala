@@ -488,7 +488,8 @@ object Curate {
         .join(sig.as("s2"), col("d2") === col(s"s2.$idCol"))
         .filter(agree >= lit(minAgree16))
         .select(col("d1"), col("d2"))
-      // eager loop — the last read of `in`, released on return
+      // eager on both routes (the driver route's collect, the loop's
+      // cuts) — the last read of `in`, released on return
       val clusters = NearDup.connectedComponents(pairs)
       sig.unpersist()
       val dropped = clusters.filter(!col("keep"))

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
+import graft.dedup.NearDup
 import graft.ops.{Densest, PageRank, Sampling}
+import graft.text.Bpe
 
 /** Loop operators release superseded checkpoint generations: after a
   * call, with its result materialized, only the cuts the result still
@@ -47,5 +49,22 @@ class LoopReleaseSpec extends SparkSuite {
     val e = (k5 ++ path).toDF("src", "dst")
     assert(heldBy(Densest.densestSubgraphTrace(e, "src", "dst",
       epsNum = 1L, epsDen = 2L, rounds = 4)) == 5)
+  }
+
+  test("connectedComponents' loop keeps only the last label generation") {
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L))
+      .toDF("d1", "d2")
+    assert(heldBy(NearDup.connectedComponentsWithin(e, "d1", "d2",
+      maxIter = 50, maxDriverEdges = 0)) == 1)
+    assert(heldBy(NearDup.connectedComponents(e)) == 0)
+  }
+
+  test("Bpe.encode above 64 merges keeps only the last chunk") {
+    val docs = Seq((1L, "ab ab abc"), (2L, "bc a")).toDF("doc_id", "text")
+    for (n <- Seq(128, 256)) {
+      val merges = ("a", "b") +: (1 until n).map(i => (s"x$i", s"y$i"))
+      assert(heldBy(Bpe.encode(docs, "doc_id", "text", merges)) == 1,
+        s"$n merges")
+    }
   }
 }
