@@ -427,12 +427,14 @@ object ScaleProbe {
       // suffix arrays over the rotated corpus (cross-copy substrings
       // disjoint): per-doc form is embarrassingly parallel; the global
       // form's active tie mass must grow with the true duplicate mass
-      // (linear in disjoint copies), never the pair count
+      // (linear in disjoint copies), never the pair count; bound 0 keeps
+      // the global form off the driver route this corpus would take
       time(s"suffix_perdoc_x$m") {
         text.SuffixArray.perDocRanks(docsR, "doc_id", "text").count()
       }
       time(s"suffix_global_x$m") {
-        text.SuffixArray.globalRanks(docsR, "doc_id", "text").count()
+        text.SuffixArray.globalRanksWithin(docsR, "doc_id", "text",
+          maxLenLog2 = 12, maxDriverChars = 0L).count()
       }
       // exact-substring threshold family (rotated corpus: cross-copy
       // grams disjoint, so dup mass — and the island/interval work — is

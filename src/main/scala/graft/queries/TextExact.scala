@@ -42,10 +42,12 @@ object TextExact extends QueryModule {
 
     // CORPUS-GLOBAL generalized suffix array: every suffix ranked
     // against all suffixes of all docs (strict ranks — identical
-    // suffixes tie) — the exact cross-doc dedup structure. After the
-    // alphabet-histogram round there is NO global sort: each doubling
-    // round is a per-doc lead + a (rank, successor) histogram prefix
-    // sum + a keyed join back.
+    // suffixes tie) — the exact cross-doc dedup structure. Up to
+    // SuffixArray.MaxDriverChars characters the doubling runs in the
+    // driver over the collected texts (a sum aggregate, one collect,
+    // then a local frame); above it each distributed round is a per-doc
+    // lead + a (rank, successor) histogram prefix sum + a keyed join
+    // back, with no global sort after the 32-char seed.
     "q334_global_sa" -> ((s, dir) =>
       graft.text.SuffixArray.globalRanks(
         Tables(s, dir).documents, "doc_id", "text")),

@@ -13,8 +13,8 @@ import graft.functions.Hash64
   *
   * == Equivalence lemma (why no per-position LCP is needed) ==
   * Define matchLen(q) = max common prefix of suffix q with any suffix of
-  * a different document (what [[SuffixArray.globalRanks]] adjacency
-  * computes), and the covered set C = ∪ {[q, q+matchLen(q)) :
+  * a different document (what adjacency in [[SuffixArray.globalRanks]]
+  * order computes), and the covered set C = ∪ {[q, q+matchLen(q)) :
   * matchLen(q) ≥ L}. Claim: C = C' where C' = ∪ {[q, q+L) : the L-gram
   * at q occurs in another document}.
   *
@@ -32,12 +32,15 @@ import graft.functions.Hash64
   * gaps-and-islands — no iterative SA rounds and no unbounded LCP
   * payloads for the fixed-threshold form. The VARIABLE-length readouts
   * (maximal repeat lengths, top-k longest) are where the suffix array
-  * earns its rounds: [[SuffixArray.crossDocRepeats]] and
+  * earns its construction — in the driver up to
+  * [[SuffixArray.MaxDriverChars]] corpus characters, by distributed
+  * doubling rounds above: [[SuffixArray.crossDocRepeats]] and
   * [[SuffixArray.crossDocRepeatsAtLeast]]; ExactSubstrSpec gates this
   * lemma against a brute-force matchLen computation on planted fixtures.
   *
   * Scale shape: corpus chars × one 8-byte hash on the wire (the same
-  * cardinality [[SuffixArray.globalRanks]]' seed round ships), every
+  * cardinality the seed round of [[SuffixArray.globalRanks]]' distributed
+  * route ships), every
   * stage keyed — gram df by hash, islands by (doc, pos) — and the
   * rewrite is a per-row array expression over run-count-bounded
   * interval lists. Collision note: a 2⁻⁶⁰ gram-hash collision marks one

@@ -1,7 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Distributed suffix-array construction by prefix doubling (the
   * Manber–Myers recurrence in its data-parallel form, the algorithm
@@ -22,6 +23,11 @@ import org.apache.spark.sql.functions._
   * recurrence with the per-doc windows replaced by the
   * [[graft.ops.Ranking]] globalOrdinals device (per-shard offsets, no
   * single-partition sort); per-doc is the committed oracle surface.
+  * A corpus of at most [[SuffixArray.MaxDriverChars]] characters takes a
+  * driver route instead: the same recurrence over primitive arrays of
+  * the concatenated code points, about 40 bytes of driver memory a
+  * character. Both routes compare suffixes by their first
+  * max(32, 2^maxLenLog2) characters.
   *
   * `localCheckpoint` per round truncates the doubling lineage (the
   * CC/k-core discipline). Rank invariant: rank values are dense in
@@ -112,6 +118,10 @@ object SuffixArray {
     fr.select(col(idCol), col("pos"), col("rank").as("sa_rank"))
   }
 
+  /** Most characters [[globalRanks]] ranks in the driver; a larger corpus
+    * runs the distributed loop. */
+  val MaxDriverChars: Long = 4000000L
+
   /** CORPUS-GLOBAL generalized suffix array: every suffix of every
     * document ranked against ALL suffixes of ALL documents — the exact
     * structure cross-document substring dedup (Lee et al. 2022) is
@@ -119,8 +129,143 @@ object SuffixArray {
     *
     * Ranks are STRICT ("count of strictly-smaller suffixes + 1"), so
     * two byte-identical suffixes from different docs share a rank — the
-    * honest verdict, and the property the whole construction exploits:
-    * with strict ranks, a tie group's members occupy ordinal positions
+    * honest verdict. Suffixes are compared by their first
+    * max(32, 2^maxLenLog2) characters in code-point order (Spark's
+    * binary string order), a suffix that ends sorting before every
+    * longer suffix it is a prefix of.
+    *
+    * Route: one 1-row aggregate sums the characters of the non-empty
+    * texts. Up to [[MaxDriverChars]], with a binary-collated string text
+    * and `Int`, `Long` or binary-collated string ids, none null and no
+    * two equal, the (id, text) rows are collected and the driver runs
+    * the doubling recurrence over primitive arrays of the concatenated
+    * code points ([[driverRanks]]). The driver holds about 40 bytes a
+    * character at the peak: four working arrays (20 bytes), then the
+    * rank arrays while they are copied into the returned local frame,
+    * which keeps about 29 (boxed `bigint` elements; 42 MB at sf0.1's
+    * 1.49M characters). Otherwise the distributed loop ([[loopArrays]])
+    * runs. Both routes give the same rows.
+    *
+    * @return (idCol, pos, sa_rank) — strict global rank; equal
+    *         suffixes share sa_rank */
+  def globalRanks(docs: DataFrame, idCol: String, textCol: String,
+      maxLenLog2: Int = 12): DataFrame =
+    globalRanksWithin(docs, idCol, textCol, maxLenLog2, MaxDriverChars)
+
+  /** [[globalRanks]] with the driver bound as a parameter: 0 forces the
+    * distributed loop on any non-empty corpus. */
+  private[graft] def globalRanksWithin(docs: DataFrame, idCol: String,
+      textCol: String, maxLenLog2: Int, maxDriverChars: Long): DataFrame = {
+    require(maxLenLog2 >= 1 && maxLenLog2 <= 20)
+    val texts = docs.select(col(idCol), col(textCol).as("__t"))
+      .filter(length(col("__t")) >= 1)
+    val idField = texts.schema.head
+    val collect =
+      Seq(IntegerType, LongType, StringType).contains(idField.dataType) &&
+        texts.schema("__t").dataType == StringType &&
+        texts.agg(coalesce(sum(length(col("__t"))), lit(0L))).head()
+          .getLong(0) <= maxDriverChars
+    val rows = if (collect) texts.collect() else Array.empty[Row]
+    val arrays =
+      if (collect && rows.forall(!_.isNullAt(0)) &&
+          rows.map(_.get(0)).distinct.length == rows.length)
+        driverArrays(docs.sparkSession, idField, rows, maxLenLog2)
+      else loopArrays(texts, idCol, maxLenLog2)
+    arrays
+      .select(col(idCol), posexplode(col("__ra")).as(Seq("__p0", "rank")))
+      .select(col(idCol), (col("__p0") + 1).cast("long").as("pos"),
+        col("rank").as("sa_rank"))
+  }
+
+  /** The driver route of [[globalRanksWithin]] over the collected
+    * (id, text) rows.
+    *
+    * @return (id, __ra) as a local frame: one row per doc, the strict
+    *         rank of each position in order */
+  private def driverArrays(spark: SparkSession, idField: StructField,
+      rows: Array[Row], maxLenLog2: Int): DataFrame = {
+    val texts = rows.map(_.getString(1))
+    val start = texts.scanLeft(0)((o, t) => o + t.codePointCount(0, t.length))
+    val rank = driverRanks(texts, start, maxLenLog2)
+    val out = new java.util.ArrayList[Row](rows.length)
+    for (d <- rows.indices)
+      out.add(Row(rows(d).get(0),
+        Array.tabulate(start(d + 1) - start(d))(p => rank(start(d) + p).toLong)))
+    spark.createDataFrame(out, StructType(Seq(idField,
+      StructField("__ra", ArrayType(LongType, containsNull = false),
+        nullable = false))))
+  }
+
+  /** Strict global ranks of every position of `texts` concatenated
+    * (doc d's code points at `start(d)` until `start(d + 1)`): the
+    * recurrence of [[loopArrays]] on primitive arrays. The first round
+    * sorts every position by its code point; round k then re-sorts each
+    * unresolved tie range by the rank at position + k (0 past the doc's
+    * end), k = 1, 2, 4, … while k < max(32, 2^maxLenLog2), and stops
+    * early when no range splits (the loop's fixpoint: equal k-prefixes
+    * then imply equal suffixes). Each range is sorted as packed longs
+    * `rank@pos+k << 32 | position`. */
+  private def driverRanks(texts: Array[String], start: Array[Int],
+      maxLenLog2: Int): Array[Int] = {
+    val n = start.last
+    val end = new Array[Int](n) // one past the last position of the doc
+    val keys = new Array[Long](n)
+    for (d <- texts.indices) {
+      val t = texts(d)
+      var (j, i) = (0, start(d))
+      while (j < t.length) {
+        val c = t.codePointAt(j)
+        keys(i) = c.toLong << 32 | i
+        end(i) = start(d + 1)
+        j += Character.charCount(c)
+        i += 1
+      }
+    }
+    val sa = new Array[Int](n)
+    val rank = new Array[Int](n)
+    // Sorts keys within each tie range [from, to) of `ties`, writes sa
+    // and the strict ranks, and returns the ranges still tied and
+    // whether any range split.
+    def refine(ties: Array[Int]): (Array[Int], Boolean) = {
+      val next = Array.newBuilder[Int]
+      var split = false
+      for (g <- ties.indices by 2) {
+        val (from, to) = (ties(g), ties(g + 1))
+        java.util.Arrays.sort(keys, from, to)
+        var s = from
+        for (j <- from until to) {
+          if (j > from && (keys(j) >>> 32) != (keys(j - 1) >>> 32)) {
+            if (j - s > 1) next.addOne(s).addOne(j)
+            s = j
+          }
+          sa(j) = keys(j).toInt
+          rank(sa(j)) = s + 1
+        }
+        if (to - s > 1) next.addOne(s).addOne(to)
+        split ||= s != from
+      }
+      (next.result(), split)
+    }
+    var (ties, split) = refine(if (n > 0) Array(0, n) else Array.empty[Int])
+    var k = 1
+    while (split && ties.nonEmpty && k < math.max(32, 1 << maxLenLog2)) {
+      // every key from the ranks before this round
+      for (g <- ties.indices by 2; j <- ties(g) until ties(g + 1)) {
+        val i = sa(j)
+        keys(j) = (if (i + k < end(i)) rank(i + k) else 0).toLong << 32 | i
+      }
+      val (t, s) = refine(ties)
+      ties = t
+      split = s
+      k *= 2
+    }
+    rank
+  }
+
+  /** The distributed route of [[globalRanksWithin]] over the non-empty
+    * (idCol, __t) rows `texts`.
+    *
+    * With strict ranks, a tie group's members occupy ordinal positions
     * `rank .. rank+|group|−1`, so re-ranking by the doubled key
     * `(rank, rank@pos+2^r)` is `new_rank = rank + (count of group
     * members whose successor-rank is strictly smaller)` — a prefix sum
@@ -131,15 +276,15 @@ object SuffixArray {
     * group's distinct successor ranks), and one keyed join back.
     * Early exit when a round changes nothing (byte-identical suffix
     * groups are permanent ties — the fixpoint, reached in
-    * ≤ ⌈log2(max doc len)⌉ rounds).
+    * ≤ ⌈log2(max doc len)⌉ rounds). Each checkpointed generation is
+    * released once the frames that read it have materialized; the
+    * result reads only the last rank arrays.
     *
-    * @return (idCol, pos, sa_rank) — strict global rank; equal
-    *         suffixes share sa_rank */
-  def globalRanks(docs: DataFrame, idCol: String, textCol: String,
-      maxLenLog2: Int = 12): DataFrame = {
-    require(maxLenLog2 >= 1 && maxLenLog2 <= 20)
+    * @return (idCol, __ra) — one row per doc, the strict rank of each
+    *         position in order */
+  private def loopArrays(texts: DataFrame, idCol: String,
+      maxLenLog2: Int): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val byPos = W.partitionBy(col(idCol)).orderBy(col("pos"))
     // Seed: strict rank of the first 32 characters (2^5 — the doubling
     // loop then starts at k=32), computed by ONE scalable global sort
     // of the distinct-prefix histogram: range-repartition by prefix,
@@ -153,9 +298,7 @@ object SuffixArray {
     // input's scan stage — a single-row-group corpus would build every
     // seed gram in ONE task; the floor lifts it to the cores (identity
     // at scale — Tables.scanFloor)
-    val grams = graft.Tables.scanFloor(docs)
-      .select(col(idCol), col(textCol).as("__t"))
-      .filter(length(col("__t")) >= 1)
+    val grams = graft.Tables.scanFloor(texts)
       .select(col(idCol),
         explode(sequence(lit(1L), length(col("__t")).cast("long")))
           .as("pos"),
@@ -190,7 +333,6 @@ object SuffixArray {
     // corpus-bytes/doc-length rows and joins keyed by doc instead of
     // broadcasting — the documented fallback; the per-round recurrence
     // is unchanged.
-    val t00 = System.nanoTime()
     val seeded = ranged.join(broadcast(offs), "__pid")
       .withColumn("rank",
         col("__off") + rank().over(wPid).cast("long"))
@@ -199,9 +341,7 @@ object SuffixArray {
           (lead(col("__g"), 1).over(wPid) <=> col("__g")))
       .select(col(idCol), col("pos"), col("rank"), col("act"))
       .localCheckpoint()
-    if (sys.env.contains("SPARK_GRAFT_SA_DEBUG"))
-      println(s"[sa] seeded ckpt secs=${(System.nanoTime() - t00) / 1e9}")
-    val t01 = System.nanoTime()
+    graft.ops.Cuts.release(ranged)
     // position-dense per-doc array: sort the (pos, rank) entries once
     // (struct order = pos order) and strip to ranks — O(n log n) per
     // doc; a map-based build would pay Spark's linear-scan map lookup
@@ -213,16 +353,13 @@ object SuffixArray {
       .select(col(idCol),
         transform(col("__e"), e => e.getField("r")).as("__ra"))
       .localCheckpoint()
-    if (sys.env.contains("SPARK_GRAFT_SA_DEBUG"))
-      println(s"[sa] arrays ckpt secs=${(System.nanoTime() - t01) / 1e9}")
+    // the cut `active` reads: seeded, then each round's upd
+    var activeCut = seeded
     var active = seeded.filter(col("act"))
       .select(col(idCol), col("pos"), col("rank"))
     var activeCount = active.count()
-    val debug = sys.env.contains("SPARK_GRAFT_SA_DEBUG")
-    if (debug) println(s"[sa] seed done, active=$activeCount")
     (SEEDLOG until maxLenLog2).foreach { r =>
       if (activeCount > 0) {
-        val tR = System.nanoTime()
         val k = 1L << r
         val withR2 = active
           .join(broadcast(arrays), idCol)
@@ -243,10 +380,13 @@ object SuffixArray {
           .select(col(idCol), col("pos"), col("__nr").as("rank"),
             col("__na").as("act"), (col("__nr") =!= col("rank")).as("__ch"))
           .localCheckpoint()
+        graft.ops.Cuts.release(activeCut)
+        activeCut = upd
         val patches = upd.filter(col("__ch"))
           .groupBy(col(idCol))
           .agg(map_from_entries(collect_list(
             struct(col("pos").cast("int"), col("rank")))).as("__um"))
+        val prevArrays = arrays
         arrays = arrays.join(patches, Seq(idCol), "left")
           .select(col(idCol),
             when(col("__um").isNull, col("__ra"))
@@ -255,6 +395,7 @@ object SuffixArray {
                 p => coalesce(element_at(col("__um"), p),
                   element_at(col("__ra"), p)))).as("__ra"))
           .localCheckpoint()
+        graft.ops.Cuts.release(prevArrays)
         active = upd.filter(col("act"))
           .select(col(idCol), col("pos"), col("rank"))
         // Fixpoint: no active row re-ranked this round (byte-identical
@@ -264,14 +405,10 @@ object SuffixArray {
           sum(when(col("act"), 1L).otherwise(0L)).as("a"),
           sum(when(col("__ch"), 1L).otherwise(0L)).as("c")).collect()(0)
         activeCount = if (st.getLong(1) == 0L) 0L else st.getLong(0)
-        if (debug) println(s"[sa] round k=$k active=$activeCount " +
-          s"secs=${(System.nanoTime() - tR) / 1e9}")
       }
     }
+    graft.ops.Cuts.release(activeCut)
     arrays
-      .select(col(idCol), posexplode(col("__ra")).as(Seq("__p0", "rank")))
-      .select(col(idCol), (col("__p0") + 1).cast("long").as("pos"),
-        col("rank").as("sa_rank"))
   }
 
   /** DuckDB oracle for [[globalRanks]]: definitional — strict rank of

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 
 import graft.dedup.NearDup
 import graft.ops.{Densest, PageRank, Sampling}
-import graft.text.Bpe
+import graft.text.{Bpe, SuffixArray}
 
 /** Loop operators release superseded checkpoint generations: after a
   * call, with its result materialized, only the cuts the result still
@@ -57,6 +57,15 @@ class LoopReleaseSpec extends SparkSuite {
     assert(heldBy(NearDup.connectedComponentsWithin(e, "d1", "d2",
       maxIter = 50, maxDriverEdges = 0)) == 1)
     assert(heldBy(NearDup.connectedComponents(e)) == 0)
+  }
+
+  test("globalRanks' loop keeps only the last rank arrays") {
+    // ties past 32 characters, so the loop runs doubling rounds
+    val docs = Seq((1L, "abab" * 20), (2L, "aba" * 20), (3L, "xy"))
+      .toDF("doc_id", "text")
+    assert(heldBy(SuffixArray.globalRanksWithin(docs, "doc_id", "text",
+      maxLenLog2 = 12, maxDriverChars = 0L)) == 1)
+    assert(heldBy(SuffixArray.globalRanks(docs, "doc_id", "text")) == 0)
   }
 
   test("Bpe.encode above 64 merges keeps only the last chunk") {
