@@ -135,16 +135,19 @@ object SuffixArray {
     * longer suffix it is a prefix of.
     *
     * Route: one 1-row aggregate sums the characters of the non-empty
-    * texts. Up to [[MaxDriverChars]], with a binary-collated string text
-    * and `Int`, `Long` or binary-collated string ids, none null and no
-    * two equal, the (id, text) rows are collected and the driver runs
-    * the doubling recurrence over primitive arrays of the concatenated
-    * code points ([[driverRanks]]). The driver holds about 40 bytes a
-    * character at the peak: four working arrays (20 bytes), then the
-    * rank arrays while they are copied into the returned local frame,
-    * which keeps about 29 (boxed `bigint` elements; 42 MB at sf0.1's
-    * 1.49M characters). Otherwise the distributed loop ([[loopArrays]])
-    * runs. Both routes give the same rows.
+    * texts. Up to [[MaxDriverChars]], with a binary-collated string text,
+    * the (id, text) rows are collected and the driver runs the doubling
+    * recurrence over primitive arrays of the concatenated code points
+    * ([[driverRanks]]). The driver holds about 40 bytes a character:
+    * four working arrays (20 bytes), then the rank array while it is
+    * copied into the returned local frame, which keeps about 29 (boxed
+    * `bigint` elements). Measured at the bound (sf0.1's documents
+    * repeated to 4.0M characters, `local[2]`): the frame kept 115 MB,
+    * the sampled heap peak, garbage included, stayed under 300 MB above
+    * the idle session, and the route ran in a 512 MB driver heap.
+    * Otherwise the distributed loop ([[loopArrays]]) runs. Both routes
+    * give the same rows. Ids name the documents and must be non-null
+    * and distinct: the loop groups and joins by id.
     *
     * @return (idCol, pos, sa_rank) — strict global rank; equal
     *         suffixes share sa_rank */
@@ -159,17 +162,12 @@ object SuffixArray {
     require(maxLenLog2 >= 1 && maxLenLog2 <= 20)
     val texts = docs.select(col(idCol), col(textCol).as("__t"))
       .filter(length(col("__t")) >= 1)
-    val idField = texts.schema.head
-    val collect =
-      Seq(IntegerType, LongType, StringType).contains(idField.dataType) &&
-        texts.schema("__t").dataType == StringType &&
-        texts.agg(coalesce(sum(length(col("__t"))), lit(0L))).head()
-          .getLong(0) <= maxDriverChars
-    val rows = if (collect) texts.collect() else Array.empty[Row]
+    val onDriver = texts.schema("__t").dataType == StringType &&
+      texts.agg(coalesce(sum(length(col("__t"))), lit(0L))).head()
+        .getLong(0) <= maxDriverChars
     val arrays =
-      if (collect && rows.forall(!_.isNullAt(0)) &&
-          rows.map(_.get(0)).distinct.length == rows.length)
-        driverArrays(docs.sparkSession, idField, rows, maxLenLog2)
+      if (onDriver) driverArrays(docs.sparkSession, texts.schema.head,
+        texts.collect(), maxLenLog2)
       else loopArrays(texts, idCol, maxLenLog2)
     arrays
       .select(col(idCol), posexplode(col("__ra")).as(Seq("__p0", "rank")))
@@ -202,9 +200,9 @@ object SuffixArray {
     * sorts every position by its code point; round k then re-sorts each
     * unresolved tie range by the rank at position + k (0 past the doc's
     * end), k = 1, 2, 4, … while k < max(32, 2^maxLenLog2), and stops
-    * early when no range splits (the loop's fixpoint: equal k-prefixes
-    * then imply equal suffixes). Each range is sorted as packed longs
-    * `rank@pos+k << 32 | position`. */
+    * early when such a round splits no range (the loop's fixpoint:
+    * equal k-prefixes then imply equal suffixes). Each range is sorted
+    * as packed longs `rank@pos+k << 32 | position`. */
   private def driverRanks(texts: Array[String], start: Array[Int],
       maxLenLog2: Int): Array[Int] = {
     val n = start.last
@@ -246,7 +244,10 @@ object SuffixArray {
       }
       (next.result(), split)
     }
-    var (ties, split) = refine(if (n > 0) Array(0, n) else Array.empty[Int])
+    var ties = refine(if (n > 0) Array(0, n) else Array.empty[Int])._1
+    // the code-point sort is not a doubling step: a corpus of one code
+    // point splits nothing there, yet "a" < "aa", so round k = 1 always runs
+    var split = true
     var k = 1
     while (split && ties.nonEmpty && k < math.max(32, 1 << maxLenLog2)) {
       // every key from the ranks before this round

@@ -9,7 +9,7 @@ import graft.text.SuffixArray
 
 /** [[SuffixArray.globalRanks]]' two routes — prefix doubling in the driver
   * up to the character bound, the distributed loop above it — give the
-  * same rows and schema; the bound and the ids decide which one runs.
+  * same rows and schema; the character bound decides which one runs.
   * Each forced-loop call runs dozens of Spark jobs, so the corpora are
   * few and each covers several cases. */
 class GlobalSuffixArraySpec extends SparkSuite {
@@ -78,14 +78,20 @@ class GlobalSuffixArraySpec extends SparkSuite {
     assert(at1(3) == 1 && at1(6) == 3)
   }
 
-  test("null or duplicate ids take the loop") {
-    val dup = Seq((1L, "ab"), (1L, "ba")).toDF("doc_id", "text")
-    assert(!onDriver(ranks(dup, Huge, 3)))
-    val nul = Seq[(java.lang.Long, String)]((1L, "ab"), (null, "ba"))
+  test("both routes agree on a corpus of one code point") {
+    // the first sort splits nothing; only doubling orders "a" < "aa"
+    val docs = Seq((1L, "aaaa"), (2L, "aa"), (3L, "a"), (4L, "aaaa"))
       .toDF("doc_id", "text")
-    assert(!onDriver(ranks(nul, Huge, 3)))
-    val ok = Seq((1L, "ab"), (2L, "ba")).toDF("doc_id", "text")
-    assert(onDriver(ranks(ok, 4L, 3)) && !onDriver(ranks(ok, 3L, 3)))
+    sameOnBothRoutes(docs, 12, "one code point")
+    val out = ranks(docs, Huge).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(out((3L, 1L)) == 1L && out((2L, 1L)) == 5L &&
+      out((1L, 2L)) == 8L && out((4L, 1L)) == 10L, out)
+  }
+
+  test("the character bound picks the route") {
+    val docs = Seq((1L, "ab"), (2L, "ba")).toDF("doc_id", "text")
+    assert(onDriver(ranks(docs, 4L, 3)) && !onDriver(ranks(docs, 3L, 3)))
   }
 
   test("the driver route starts as many jobs for 2 docs as for 200") {
