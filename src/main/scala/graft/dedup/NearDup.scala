@@ -713,17 +713,16 @@ object NearDup {
   private def labelLoop(e: DataFrame, maxIter: Int): DataFrame = {
     val sym = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist()
-    var cut = sym.select(col("src").as("node")).distinct()
-      .withColumn("lab", col("node")).localCheckpoint()
-    var labels = cut
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // The previous label rides along as `old` (non-null exactly on the
-      // labels arm; max() ignores the nulls) so convergence is a plain
-      // filter-count over the checkpointed generation — no per-round
-      // labels⋈next join job, which halves the loop's contention-sensitive
-      // job count.
+    // The previous label rides along as `old` (non-null exactly on the
+    // labels arm; max() ignores the nulls) so convergence is a plain
+    // filter-count over the checkpointed generation — no per-round
+    // labels⋈next join job, which halves the loop's contention-sensitive
+    // job count.
+    val settled = (g: DataFrame, r: Int) =>
+      r > 0 && g.filter(col("lab") < col("old")).count() == 0
+    val last = Cuts.generations(sym.select(col("src").as("node")).distinct()
+        .withColumn("lab", col("node")), maxIter, settled) { (g, _) =>
+      val labels = g.select(col("node"), col("lab"))
       val nullLab = when(lit(false), col("lab"))
       val viaNbr = sym.join(labels, sym("dst") === labels("node"))
         .select(sym("src").as("node"), labels("lab").as("lab"))
@@ -738,17 +737,12 @@ object NearDup {
           col("a.lab") === col("b.node"))
         .select(col("a.node").as("node"), col("b.lab").as("lab"),
           col("a.old").as("old"))
-      val next = prop.unionAll(shortcut)
+      prop.unionAll(shortcut)
         .groupBy(col("node")).agg(min(col("lab")).as("lab"),
-          max(col("old")).as("old")).localCheckpoint()
-      Cuts.release(cut)
-      cut = next
-      changed = next.filter(col("lab") < col("old")).count()
-      labels = next.select(col("node"), col("lab"))
-      iter += 1
+          max(col("old")).as("old"))
     }
     sym.unpersist()
-    labels.select(col("node"), col("lab").as("cluster_id"),
+    last.select(col("node"), col("lab").as("cluster_id"),
       (col("node") === col("lab")).as("keep"))
   }
 

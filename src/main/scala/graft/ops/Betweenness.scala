@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: every round is one (seed, node)-keyed equi-join plus
   * one keyed aggregation; frames are (seed × reached-neighborhood)-
-  * sized; `localCheckpoint` per generation (the BFS discipline).
+  * sized; a `localCheckpoint` per generation, each held as the result
+  * reads them all ([[Cuts]]).
   * Overflow ledger: `σ_v·(10⁶ + δ_q(w)) < 2⁶³` — σ grows with the
   * path-multiplicity of the graph, so the hop cap (≤ 4) is load-
   * bearing; callers on path-dense graphs lower it.

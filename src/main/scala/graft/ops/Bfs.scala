@@ -15,9 +15,11 @@ import org.apache.spark.sql.functions._
   * Scale shape: each round is ONE keyed equi-join of the current
   * distance frame against the edge list plus a min-aggregation — the
   * frontier never leaves the cluster, nothing is collected or
-  * broadcast. Per-generation `localCheckpoint` truncates the doubling
-  * plan lineage (the measured CC/k-core failure mode). Frontier size is
-  * bounded by the k-hop neighborhood, the quantity the query is ABOUT.
+  * broadcast. Each round is a generation of [[Cuts.generations]], which
+  * truncates the doubling plan lineage (the measured CC/k-core failure
+  * mode); the undirected edge cut lives for the loop ([[Cuts.scoped]]).
+  * Frontier size is bounded by the k-hop neighborhood, the quantity the
+  * query is ABOUT.
   */
 object Bfs {
 
@@ -30,25 +32,34 @@ object Bfs {
   def kHopDistances(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, hops: Int): DataFrame = {
     require(hops >= 1 && hops <= 16, s"hops must be in [1,16], got $hops")
+    frontier(edges, srcCol, dstCol, seeds, hops, perSeed = false)
+  }
+
+  /** Shortest hop distances within `hops` rounds from the seeds over
+    * the undirected, self-loop-free edges: (node, dist), the minimum
+    * over all seeds, or (s, node, dist) per seed `s` when `perSeed`.
+    * Round r extends every key's nodes at distance r − 1 by one edge and
+    * keeps each key's minimum. */
+  private def frontier(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: DataFrame, hops: Int, perSeed: Boolean): DataFrame = {
     val e = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
         col(srcCol) =!= col(dstCol))
       .select(col(srcCol).as("u"), col(dstCol).as("v"))
-    val und = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint()
-    var dist = seeds.toDF("node").distinct()
-      .select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    (1 to hops).foreach { r =>
-      val next = dist.filter(col("dist") === (r - 1))
-        .join(und, col("node") === col("u"))
-        .select(col("v").as("node"), lit(r.toLong).as("dist"))
-      dist = dist.unionAll(next)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
+    val key = if (perSeed) Seq(col("s")) else Seq.empty
+    val d0 = seeds.toDF("node").distinct()
+      .select(key.map(_ => col("node").as("s")) ++
+        Seq(col("node"), lit(0L).as("dist")): _*)
+    Cuts.scoped(e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+        .distinct().localCheckpoint()) { und =>
+      Cuts.generations(d0, hops) { (dist, r) =>
+        val next = dist.filter(col("dist") === (r - 1))
+          .join(und, col("node") === col("u"))
+          .select(key :+ col("v").as("node") :+ lit(r.toLong).as("dist"): _*)
+        dist.unionAll(next)
+          .groupBy(key :+ col("node"): _*).agg(min(col("dist")).as("dist"))
+      }
     }
-    dist
   }
 
   /** WEIGHTED shortest distances within `hops` relaxation rounds —
@@ -59,8 +70,8 @@ object Bfs {
     * Non-negative integer weights keep everything exact.
     *
     * Same scale shape and lineage discipline as the unweighted form:
-    * one keyed join + one min-aggregation per round, localCheckpoint
-    * per generation.
+    * one keyed join + one min-aggregation per round, one
+    * [[Cuts.generations]] generation each.
     *
     * @return (node, dist) — dist the minimal weighted distance over
     *         paths of at most `hops` edges
@@ -73,21 +84,19 @@ object Bfs {
         col(srcCol) =!= col(dstCol) && col(weightCol) >= 0)
       .select(col(srcCol).as("u"), col(dstCol).as("v"),
         col(weightCol).as("w"))
-    val und = e.unionAll(e.select(col("v").as("u"), col("u").as("v"),
+    val d0 = seeds.toDF("node").distinct()
+      .select(col("node"), lit(0L).as("dist"))
+    Cuts.scoped(e.unionAll(e.select(col("v").as("u"), col("u").as("v"),
         col("w")))
       .groupBy(col("u"), col("v")).agg(min(col("w")).as("w"))
-      .localCheckpoint()
-    var dist = seeds.toDF("node").distinct()
-      .select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    (1 to hops).foreach { _ =>
-      val relaxed = dist.join(und, col("node") === col("u"))
-        .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionAll(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
+      .localCheckpoint()) { und =>
+      Cuts.generations(d0, hops) { (dist, _) =>
+        val relaxed = dist.join(und, col("node") === col("u"))
+          .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
+        dist.unionAll(relaxed)
+          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+      }
     }
-    dist
   }
 
   /** DuckDB oracle for [[weightedDistances]], unrolled rounds.
@@ -159,25 +168,7 @@ object Bfs {
   def harmonicCentrality(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, hops: Int): DataFrame = {
     require(hops >= 1 && hops <= 8)
-    val e = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(srcCol) =!= col(dstCol))
-      .select(col(srcCol).as("u"), col(dstCol).as("v"))
-    val und = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint()
-    var dist = seeds.toDF("node").distinct()
-      .select(col("node").as("s"), col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    (1 to hops).foreach { r =>
-      val next = dist.filter(col("dist") === (r - 1))
-        .join(und, col("node") === col("u"))
-        .select(col("s"), col("v").as("node"), lit(r.toLong).as("dist"))
-      dist = dist.unionAll(next)
-        .groupBy(col("s"), col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-    }
-    dist
+    frontier(edges, srcCol, dstCol, seeds, hops, perSeed = true)
       .filter(col("dist") > 0)
       .groupBy(col("node"))
       .agg(sum(expr("1000000 div dist")).as("h_q"))
@@ -194,25 +185,8 @@ object Bfs {
   def eccentricity(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, hops: Int): DataFrame = {
     require(hops >= 1 && hops <= 8)
-    val e = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(srcCol) =!= col(dstCol))
-      .select(col(srcCol).as("u"), col(dstCol).as("v"))
-    val und = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint()
-    var dist = seeds.toDF("node").distinct()
-      .select(col("node").as("s"), col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    (1 to hops).foreach { r =>
-      val next = dist.filter(col("dist") === (r - 1))
-        .join(und, col("node") === col("u"))
-        .select(col("s"), col("v").as("node"), lit(r.toLong).as("dist"))
-      dist = dist.unionAll(next)
-        .groupBy(col("s"), col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-    }
-    dist.groupBy(col("s").as("node"))
+    frontier(edges, srcCol, dstCol, seeds, hops, perSeed = true)
+      .groupBy(col("s").as("node"))
       .agg(max(col("dist")).as("ecc"),
         (count(lit(1)) - 1).as("n_reached"))
   }

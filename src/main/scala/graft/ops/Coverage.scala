@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * covered-unit set + one count aggregation + a 1-ROW argmax collect
   * (the BPE contract-bounded driver round-trip — k rounds, k ≤ 16).
   * The covered set lives as a checkpointed unit frame, never a
-  * driver-side collection.
+  * driver-side collection, one [[Cuts.generations]] generation a pick.
   */
 object Coverage {
 
@@ -38,18 +38,15 @@ object Coverage {
     require(k >= 1 && k <= 16)
     val spark = pairs.sparkSession
     import org.apache.spark.sql.types._
-    val m = pairs
+    var chosen = Seq.empty[(Int, Any, Long, Long)]
+    Cuts.scoped(pairs
       .filter(col(srcCol).isNotNull && col(unitCol).isNotNull)
       .select(col(srcCol).cast("string").as("__s"), col(unitCol).as("__u"))
       .distinct()
-      .localCheckpoint()
-    var covered = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("__u", m.schema("__u").dataType))))
-    var chosen = Seq.empty[(Int, Any, Long, Long)]
-    var done = false
-    (1 to k).foreach { r =>
-      if (!done) {
+      .localCheckpoint()) { m =>
+      // picks the source that adds the most units beyond `covered`;
+      // false when every remaining source adds nothing
+      def pick(covered: DataFrame): Boolean = {
         val picked = chosen.map(_._2.toString)
         val gains = m
           .filter(if (picked.isEmpty) lit(true)
@@ -59,17 +56,26 @@ object Coverage {
           .orderBy(col("__g").desc, col("__s"))
           .limit(1)
           .collect()
-        if (gains.isEmpty || gains.head.getLong(1) == 0L) done = true
-        else {
-          val pick = gains.head.get(0)
-          val gain = gains.head.getLong(1)
-          val total = chosen.map(_._3).sum + gain
-          chosen = chosen :+ ((r, pick, gain, total))
-          covered = covered
-            .unionAll(m.filter(col("__s") === pick).select(col("__u")))
-            .distinct()
-            .localCheckpoint()
-        }
+        for (g <- gains.headOption if g.getLong(1) != 0L)
+          chosen = chosen :+ ((chosen.length + 1, g.get(0), g.getLong(1),
+            chosen.map(_._3).sum + g.getLong(1)))
+        chosen.length > picked.length
+      }
+      // `covered` plus the last pick's units
+      def cover(covered: DataFrame): DataFrame = covered
+        .unionAll(m.filter(col("__s") === chosen.last._2).select(col("__u")))
+        .distinct()
+      val none = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(Seq(StructField("__u", m.schema("__u").dataType))))
+      // generation r is the covered set after pick r + 1, and the next
+      // pick against it is the loop's stop test. The result reads no
+      // covered set, so the last one goes too.
+      if (pick(none)) {
+        val last = Cuts.generations(cover(none), k - 1,
+          (covered, _) => chosen.length == k || !pick(covered))(
+          (covered, _) => cover(covered))
+        Cuts.scoped(last)(_ => ())
       }
     }
     import scala.jdk.CollectionConverters._

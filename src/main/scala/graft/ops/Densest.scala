@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per round: one map-side-combinable degree count, a
   * one-row stats frame broadcast back, two LEFT SEMI joins restricting
-  * the edge list. Each generation `localCheckpoint`ed (the [[KCore]]
-  * lineage lesson). Output is the ROUND TRACE — R+1 rows, never the
-  * corpus.
+  * the edge list. Each edge generation is a [[Cuts.generations]]
+  * generation (the [[KCore]] lineage lesson). Output is the ROUND
+  * TRACE — R+1 rows, never the corpus.
   */
 object Densest {
 
@@ -38,18 +38,17 @@ object Densest {
       dstCol: String, epsNum: Long = 1L, epsDen: Long = 1L,
       rounds: Int = 12): DataFrame = {
     require(epsNum >= 1 && epsDen >= 1 && rounds >= 1)
-    var e = edges
+    val e0 = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
         col(srcCol) =!= col(dstCol))
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
       .distinct()
-      .localCheckpoint()
     val traces = scala.collection.mutable.Buffer.empty[DataFrame]
-    (0 to rounds).foreach { r =>
-      // referenced by the round's stats, the trace entry, AND the
-      // survivor cut — checkpointed so the degree aggregation runs once
-      // per round instead of thrice (node-count × 2 columns)
+    // round r's degrees over its edges `e`, cut because its stats, trace
+    // row and survivor filter all read them, and its 1-row stats; the
+    // trace row, which reads no edges, goes to `traces`
+    def degrees(e: DataFrame, r: Int): (DataFrame, DataFrame) = {
       val deg = e.select(col("u").as("node"))
         .unionAll(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -59,23 +58,18 @@ object Densest {
       traces += stats.filter(col("__v") > 0)
         .select(lit(r.toLong).as("round"), col("__v").as("n_nodes"),
           expr("__e2 div 2").as("n_edges"))
-      if (r < rounds) {
-        val surv = deg.crossJoin(broadcast(stats))
-          .filter(col("d") * col("__v") * epsDen >
-            lit(epsDen + epsNum) * col("__e2"))
-          .select(col("node"))
-        val next = e.join(surv.withColumnRenamed("node", "u"), Seq("u"),
-            "left_semi")
-          .join(surv.withColumnRenamed("node", "v"), Seq("v"),
-            "left_semi")
-          .localCheckpoint()
-        Cuts.release(e)
-        e = next
-      }
+      (deg, stats)
     }
-    // every deg has materialized, and the lazy trace rows read only the
-    // degs, so the last edge generation can go too
-    Cuts.release(e)
+    val last = Cuts.generations(e0, rounds) { (e, r) =>
+      val (deg, stats) = degrees(e, r - 1)
+      val surv = deg.crossJoin(broadcast(stats))
+        .filter(col("d") * col("__v") * epsDen >
+          lit(epsDen + epsNum) * col("__e2"))
+        .select(col("node"))
+      e.join(surv.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+        .join(surv.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
+    }
+    Cuts.scoped(last)(degrees(_, rounds))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("density").desc, col("round"))
     traces.reduce(_ unionAll _)

@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * Scale shape: each round is one map-side-combinable degree count +
   * two keyed LEFT SEMI joins restricting the edge list — no windows,
   * nothing collected, nothing broadcast but the plan itself. Each
-  * generation is `localCheckpoint`ed: the edge frame feeds four plan
-  * arms per round (both degree-union legs + both semi-join probes), so
-  * un-truncated lineage would grow ~4^rounds plan nodes and stall
-  * driver-side analysis (the failure mode measured on the distributed
+  * round is a [[Cuts.generations]] generation: the edge frame feeds
+  * four plan arms per round (both degree-union legs + both semi-join
+  * probes), so un-truncated lineage would grow ~4^rounds plan nodes and
+  * stall driver-side analysis (the failure mode measured on the distributed
   * loop of [[graft.dedup.NearDup.connectedComponents]]).
   */
 object KCore {
@@ -35,21 +35,19 @@ object KCore {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int = 4): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    var e = edges
+    val e0 = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
         col(srcCol) =!= col(dstCol))
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
       .distinct()
-      .localCheckpoint()
-    (1 to rounds).foreach { _ =>
+    val e = Cuts.generations(e0, rounds) { (e, _) =>
       val surv = e.select(col("u").as("node"))
         .unionAll(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("node"))
-      e = e.join(surv.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+      e.join(surv.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
         .join(surv.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .localCheckpoint()
     }
     e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
@@ -67,8 +65,8 @@ object KCore {
     *
     * Scale shape per round: one keyed join (adjacency against the
     * value table) + one per-node window over neighbor lists (degree-
-    * bounded partitions) — no global sorts; each generation
-    * `localCheckpoint`ed (the [[kCore]] lineage discipline).
+    * bounded partitions) — no global sorts; one [[Cuts.generations]]
+    * generation per round (the [[kCore]] lineage discipline).
     *
     * @return (node, coreness, deg) */
   def corenessHIndex(edges: DataFrame, srcCol: String, dstCol: String,
@@ -85,17 +83,15 @@ object KCore {
       .localCheckpoint()
     val deg = adj.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("deg"))
-    var c = deg.select(col("node"), col("deg").as("c"))
-      .localCheckpoint()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("a")).orderBy(col("__cv").desc, col("b"))
-    (1 to rounds).foreach { _ =>
-      c = adj.join(c.withColumnRenamed("node", "b"), "b")
+    val c = Cuts.generations(deg.select(col("node"), col("deg").as("c")),
+        rounds) { (c, _) =>
+      adj.join(c.withColumnRenamed("node", "b"), "b")
         .select(col("a"), col("b"), col("c").as("__cv"))
         .withColumn("__rn", row_number().over(w).cast("long"))
         .groupBy(col("a").as("node"))
         .agg(max(least(col("__rn"), col("__cv"))).as("c"))
-        .localCheckpoint()
     }
     c.join(deg, "node")
       .select(col("node"), col("c").as("coreness"), col("deg"))

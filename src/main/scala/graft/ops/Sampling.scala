@@ -382,18 +382,17 @@ object Sampling {
     // before-plan, plans/r14). The state is source-cardinality, so the
     // per-round eager cut is ~free (guide §7.2 duplicated subtrees;
     // unreplicated blocks — the documented checkpoint tradeoff).
-    var st = perSource
+    val st0 = perSource
       .select(col(srcCol), col(availCol).cast("long").as("avail"))
       .crossJoin(broadcast(total))
       .withColumn("__b", expr(s"(__total * $budgetNum) div $budgetDen"))
       .select(col(srcCol), col("avail"), wn.as("wn"), col("__b"),
         lit(false).as("capped"), lit(0L).as("demand"))
-      .localCheckpoint()
-    (1 to rounds).foreach { _ =>
+    val st = Cuts.generations(st0, rounds) { (st, _) =>
       val rem = st.agg(
         sum(when(col("capped"), col("avail")).otherwise(0L)).as("__used"),
         sum(when(!col("capped"), col("wn")).otherwise(0L)).as("__remw"))
-      val next = st.drop("demand").crossJoin(broadcast(rem))
+      st.drop("demand").crossJoin(broadcast(rem))
         .withColumn("demand",
           when(col("capped"), col("avail"))
             .when(col("__remw") > 0,
@@ -402,9 +401,6 @@ object Sampling {
         .withColumn("capped", col("capped") || col("demand") >= col("avail"))
         .select(col(srcCol), col("avail"), col("wn"), col("__b"),
           col("capped"), col("demand"))
-        .localCheckpoint()
-      Cuts.release(st)
-      st = next
     }
     st.select(col(srcCol), col("avail"), col("wn"),
       col("capped").cast("long").as("capped"),

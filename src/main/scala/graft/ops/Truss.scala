@@ -31,21 +31,26 @@ object Truss {
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int = 4): DataFrame = {
     require(k >= 3 && rounds >= 1 && rounds <= 8)
-    var e = edges
+    val e0 = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
         col(srcCol) =!= col(dstCol))
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
       .distinct()
-      .localCheckpoint()
-    var last: DataFrame = e.withColumn("support", lit(0L)).limit(0)
+    // the round's persisted orientation and adjacency, dropped once the
+    // round's cut exists
+    var roundCache = Seq.empty[DataFrame]
     // fixpoint exit: a round that removes nothing recomputes identical
     // supports forever after, so stopping early returns exactly what
     // the oracle's fixed rounds compute (1-row count, the BPE idiom)
-    var prevCount = e.count()
-    var done = false
-    (1 to rounds).foreach { _ =>
-      if (!done) {
+    var prevCount = -1L
+    val settled = (g: DataFrame, _: Int) => {
+      roundCache.foreach(_.unpersist()); roundCache = Nil
+      val n = g.count()
+      try n == prevCount finally prevCount = n
+    }
+    Cuts.generations(e0, rounds, settled) { (g, _) =>
+      val e = g.select(col("u"), col("v"))
       val deg = e.select(col("u").as("n"))
         .unionAll(e.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("d"))
@@ -59,6 +64,7 @@ object Truss {
         .persist()
       val adj = o.groupBy(col("s").as("n"))
         .agg(collect_list(col("t")).as("nbrs")).persist()
+      roundCache = Seq(o, adj)
       val wit = o
         .join(adj.select(col("n").as("s"), col("nbrs").as("__ns")),
           Seq("s"))
@@ -76,17 +82,9 @@ object Truss {
           greatest(col("a"), col("b")).as("v"))
       val sup = credits.groupBy(col("u"), col("v"))
         .agg(count(lit(1)).as("support"))
-      last = e.join(sup, Seq("u", "v"))
+      e.join(sup, Seq("u", "v"))
         .filter(col("support") >= k - 2)
-        .localCheckpoint()
-      o.unpersist(); adj.unpersist()
-      e = last.select(col("u"), col("v"))
-      val n = last.count()
-      done = n == prevCount
-      prevCount = n
-      }
     }
-    last
   }
 
   /** DuckDB oracle for [[kTruss]]: the same fixed rounds, support via

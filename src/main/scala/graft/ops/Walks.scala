@@ -25,9 +25,10 @@ import graft.functions.Hash64
   * step); each step is two keyed equi-joins (frontier→degree for the
   * modulus, then (node, pick)→ranked-neighbor) — the frontier is
   * |starts|·walksPerNode rows regardless of step, nothing fans out,
-  * nothing is collected. `localCheckpoint` per generation truncates
-  * the lineage (the CC/k-core discipline). Walks that reach a sink
-  * node (no out-edges) simply end — the honest dangling-node verdict.
+  * nothing is collected. A `localCheckpoint` per generation truncates
+  * the lineage, each held as the result reads them all ([[Cuts]]).
+  * Walks that reach a sink node (no out-edges) simply end — the honest
+  * dangling-node verdict.
   */
 object Walks {
 

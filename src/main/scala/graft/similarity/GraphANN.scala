@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hash64
+import graft.ops.Cuts
 
 /** Graph-based approximate nearest neighbour — the production-standard
   * third member of the ANN family next to [[IVF]] (cell pruning) and
@@ -226,12 +227,13 @@ object GraphANN {
   /** The shared synchronous-expansion loop: returns the final beam
     * (qid, id, cosine) and the full visited set (qid, id).
     *
-    * Each generation is truncated eagerly (`localCheckpoint` — the
-    * q401/q411 lineage recipe): round r references the edge list and
-    * round r−1's beam 2–3×, so left lazy the plan re-embeds — and
-    * re-EXECUTES — the entire upstream graph build per reference,
-    * exponentially in `rounds` (q447's plan read 854 parquet scans /
-    * 1174 Exchanges before the cut; 14 scans / ~60 Exchanges after).
+    * Each beam is a [[Cuts.generations]] generation and each round's
+    * candidates an eager cut (the q401/q411 lineage recipe): round r
+    * references the edge list and round r−1's beam 2–3×, so left lazy
+    * the plan re-embeds — and re-EXECUTES — the entire upstream graph
+    * build per reference, exponentially in `rounds` (q447's plan read
+    * 854 parquet scans / 1174 Exchanges before the cut; 14 scans / ~60
+    * Exchanges after).
     * The checkpointed frames are tiny by the operator's own scale
     * contract: |Q|·beam beam rows, |Q|·beam·k candidate rows, n·k
     * edges — never the corpus. */
@@ -239,27 +241,27 @@ object GraphANN {
       edges: DataFrame, seeds: DataFrame, beam: Int,
       rounds: Int): (DataFrame, DataFrame) = {
     require(beam >= 1 && rounds >= 0)
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
     def score(cand: DataFrame): DataFrame = cand
       .join(base, "id")
       .join(queries, "qid")
       .select(col("qid"), col("id"),
         Similarity.cosineNative(col("qv"), col("ev")).as("cosine"))
-    val cand0 = seeds.select(col("qid"), col("id")).localCheckpoint()
-    var beamDf = TopK.perGroup(score(cand0), Seq("qid"), "id",
-      "cosine", beam).localCheckpoint()
-    var visited = cand0
-    for (_ <- 1 to rounds) {
-      val nbrs = beamDf.select(col("qid"), col("id"))
-        .join(e, col("id") === col("src"))
-        .select(col("qid"), col("dst").as("id"))
-      val cand = nbrs.union(beamDf.select(col("qid"), col("id")))
-        .distinct().localCheckpoint()
-      visited = visited.union(cand).distinct()
-      beamDf = TopK.perGroup(score(cand), Seq("qid"), "id",
-        "cosine", beam).localCheckpoint()
+    Cuts.scoped(edges.select(col("src"), col("dst")).localCheckpoint()) { e =>
+      // every round's candidates stay cut: the visited set reads them all
+      val cand0 = seeds.select(col("qid"), col("id")).localCheckpoint()
+      var visited = cand0
+      val beamDf = Cuts.generations(TopK.perGroup(score(cand0), Seq("qid"),
+          "id", "cosine", beam), rounds) { (beamDf, _) =>
+        val cand = beamDf.select(col("qid"), col("id"))
+          .join(e, col("id") === col("src"))
+          .select(col("qid"), col("dst").as("id"))
+          .union(beamDf.select(col("qid"), col("id")))
+          .distinct().localCheckpoint()
+        visited = visited.union(cand).distinct()
+        TopK.perGroup(score(cand), Seq("qid"), "id", "cosine", beam)
+      }
+      (beamDf, visited)
     }
-    (beamDf, visited)
   }
 
   private def nScoredOf(visited: DataFrame): DataFrame =

@@ -377,8 +377,8 @@ object Bpe {
     * vocabularies apply in 64-merge chunks with a lineage cut between
     * chunks (CollapseProject would otherwise re-fuse the chain into a
     * single ~512-deep expression, and task serialization
-    * stack-overflows near ~250 merges), still scan-bound; each chunk's
-    * cut is released once the next chunk's cut exists. */
+    * stack-overflows near ~250 merges), still scan-bound; each chunk is
+    * a [[Cuts.generations]] generation. */
   def encode(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)],
       seed: Column => Column = TextAnalysis.tokens): DataFrame = {
@@ -392,14 +392,13 @@ object Bpe {
       } else {
         val st0 = docs.select(col(idCol),
           stateOf(seed(col(textCol))).as("__st"))
-        val mergedDf = merges.grouped(chunkSize).foldLeft(st0) {
-          (df, grp) =>
-            val cut = df.withColumn("__st", grp.foldLeft(col("__st")) {
-              case (st, (a, b)) => applyMerge(st, a, b)
-            }).localCheckpoint()
-            if (df ne st0) Cuts.release(df)
-            cut
-        }
+        val chunks = merges.grouped(chunkSize).toIndexedSeq
+        def applyChunk(df: DataFrame, i: Int): DataFrame =
+          df.withColumn("__st", chunks(i).foldLeft(col("__st")) {
+            case (st, (a, b)) => applyMerge(st, a, b)
+          })
+        val mergedDf = Cuts.generations(applyChunk(st0, 0),
+          chunks.length - 1)(applyChunk)
         mergedDf.select(col(idCol), symbolsOf(col("__st")).as("__syms"))
       }
     symsDf

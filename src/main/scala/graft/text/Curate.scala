@@ -168,19 +168,16 @@ object Curate {
     * of the input's whole plan. A cut, not a `persist`: with a cached
     * frame every gate still plans over the input's plan, and q403
     * measured 2–3 s slower that way (sf0.001, 4 cores).
-    * The cut's blocks are released when `body` returns, so `body` must
-    * finish every read of its argument — end in an eager checkpoint, or
-    * return a frame that no longer reads it. Releasing the cut touches
-    * only its own blocks, so a cache the caller put on `docs` (which the
-    * cut reads) stays cached. Results are unchanged: the gates see the
-    * same rows either way. */
+    * The cut lives for `body` ([[Cuts.scoped]]), so a cache the caller
+    * put on `docs` stays cached. Results are unchanged: the gates see
+    * the same rows either way. */
   private def withInputOnce[T](docs: DataFrame, idCol: String,
       textCol: String)(body: DataFrame => T): T = {
     val cut = docs.select(col(idCol), col(textCol)).localCheckpoint()
     cut.queryExecution.logical.collectFirst {
       case r: LogicalRDD => r.rdd.setName(readOnceInput)
     }
-    try body(cut) finally Cuts.release(cut)
+    Cuts.scoped(cut)(body)
   }
 
   /** Storage name of [[withInputOnce]]'s cut while it is held. */

@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.HeldRdds
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.dedup.NearDup
-import graft.ops.{Densest, PageRank, Sampling}
+import graft.ops.{Bfs, Coverage, Densest, KCore, PageRank, Sampling, Truss}
+import graft.similarity.GraphANN
 import graft.text.{Bpe, SuffixArray}
 
 /** Loop operators release superseded checkpoint generations: after a
@@ -12,19 +15,18 @@ import graft.text.{Bpe, SuffixArray}
 class LoopReleaseSpec extends SparkSuite {
   import spark.implicits._
 
-  /** Persisted RDDs the call created that are still persisted once its
-    * result is collected (twice: a released cut the result still read
-    * would fail the second read). Counted by RDD id, because the
-    * context holds persisted RDDs weakly: an earlier spec's unreachable
-    * frames may leave the map at any time. */
-  private def heldBy(call: => DataFrame): Int = {
-    val sc = spark.sparkContext
-    val firstId = sc.emptyRDD[Int].id
-    val out = call
-    out.collect()
-    out.collect()
-    sc.getPersistentRDDs.keys.count(_ > firstId)
-  }
+  /** RDDs the call created that still hold storage once its result is
+    * collected (twice: a released cut the result still read would fail
+    * the second read) — counted by [[HeldRdds]], which a GC during the
+    * call cannot fool. */
+  private def heldBy(call: => DataFrame): Int = heldByAll(Seq(call))
+
+  private def heldByAll(call: => Seq[DataFrame]): Int =
+    HeldRdds.by(spark.sparkContext) {
+      val outs = call
+      outs.foreach(_.collect())
+      outs.foreach(_.collect())
+    }.size
 
   test("hits keeps only the last hub and auth") {
     val edges = Seq((1L, 101L), (1L, 102L), (1L, 103L), (2L, 101L),
@@ -74,6 +76,64 @@ class LoopReleaseSpec extends SparkSuite {
       val merges = ("a", "b") +: (1 until n).map(i => (s"x$i", s"y$i"))
       assert(heldBy(Bpe.encode(docs, "doc_id", "text", merges)) == 1,
         s"$n merges")
+    }
+  }
+
+  private def path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L))
+    .toDF("src", "dst")
+
+  test("Bfs keeps only the last distance generation") {
+    val seeds = Seq(1L, 7L).toDF("node")
+    assert(heldBy(Bfs.kHopDistances(path, "src", "dst", seeds, 3)) == 1)
+    assert(heldBy(Bfs.harmonicCentrality(path, "src", "dst", seeds,
+      3)) == 1)
+    assert(heldBy(Bfs.eccentricity(path, "src", "dst", seeds, 3)) == 1)
+    val weighted = path.withColumn("w", col("src") + 1L)
+    assert(heldBy(Bfs.weightedDistances(weighted, "src", "dst", "w",
+      seeds, 3)) == 1)
+  }
+
+  test("kCore keeps only the last edge generation, corenessHIndex the " +
+      "last values and the adjacency its degrees read") {
+    // K4 plus a tail: the tail peels at k = 3
+    val g = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+      (3L, 4L), (4L, 5L), (5L, 6L)).toDF("src", "dst")
+    assert(heldBy(KCore.kCore(g, "src", "dst", k = 3, rounds = 3)) == 1)
+    assert(heldBy(KCore.corenessHIndex(g, "src", "dst", rounds = 3)) == 2)
+  }
+
+  test("kTruss keeps only the last generation, at its fixpoint exit too") {
+    // two triangles sharing (1, 2) and a pendant: the 3-truss is reached
+    // in round 1, so round 2 finds the fixpoint well before round 8
+    val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (1L, 4L), (2L, 4L),
+      (5L, 1L)).toDF("src", "dst")
+    for (rounds <- Seq(1, 8))
+      assert(heldBy(Truss.kTruss(g, "src", "dst", k = 3, rounds = rounds))
+        == 1, s"rounds = $rounds")
+  }
+
+  test("greedySelect keeps no cut") {
+    val pairs = Seq("s1" -> "a", "s1" -> "b", "s2" -> "b", "s2" -> "c",
+      "s3" -> "a").toDF("src", "unit")
+    for (k <- Seq(1, 2, 3))
+      assert(heldBy(Coverage.greedySelect(pairs, "src", "unit", k)) == 0,
+        s"k = $k")
+  }
+
+  test("beamSearchTopKFrom keeps the last beam and every round's " +
+      "candidates") {
+    val base = (1L to 6L).map(i => (i, Seq(1.0, i.toDouble)))
+      .toDF("id", "ev")
+    val queries = Seq((100L, Seq(1.0, 6.0))).toDF("qid", "qv")
+    val edges = (1L to 5L).map(i => (i, i + 1)).toDF("src", "dst")
+    val seeds = Seq((100L, 1L)).toDF("qid", "id")
+    for (rounds <- Seq(0, 2)) {
+      // the beam and, for n_scored, the seeds and one cut per round
+      assert(heldByAll {
+        val (topk, nScored) = GraphANN.beamSearchTopKFrom(base, queries,
+          edges, seeds, beam = 2, rounds = rounds, k = 2)
+        Seq(topk, nScored)
+      } == 2 + rounds, s"rounds = $rounds")
     }
   }
 }
