@@ -69,15 +69,22 @@ object ScaleProbe {
           hash = functions.Hash64.fast60)
         dedup.NearDup.simhashPairs(sigs, "doc_id", maxHamming = 8).count()
       }
-      // round-8 wave-5 families: all doc-keyed (windows / broadcast
-      // joins / per-doc regex counts) — expected linear-or-better
+      // the word-level gates the DocGates kernel serves: per-row
+      // projections, expected linear. Each sums its verdict column, which
+      // reads every count, so column pruning cannot skip the work (a
+      // count() of a projection evaluates none of it)
+      def passes(df: DataFrame, verdict: String): Long =
+        df.agg(sum(when(col(verdict), 1L).otherwise(0L))).head.getLong(0)
+      time(s"gopher_rules_x$m") {
+        passes(text.Gopher.ruleGates(docs, "doc_id", "text"), "pass")
+      }
       time(s"gopher_rep_x$m") {
-        text.Gopher.dupNgramCoverage(docs, "doc_id", "text").count()
+        passes(text.Gopher.dupNgramCoverage(docs, "doc_id", "text"), "pass")
       }
       time(s"blocklist_x$m") {
-        text.Blocklist.phraseHits(docs, "doc_id", "text",
+        passes(text.Blocklist.phraseHits(docs, "doc_id", "text",
           Seq("table scan merge", "join order", "batch batch batch",
-            "slow query", "data line")).count()
+            "slow query", "data line")), "blocked")
       }
       time(s"script_mix_x$m") {
         text.Scripts.scriptMix(docs, "doc_id", "text").count()

@@ -49,8 +49,10 @@ case class TokenCount(child: Expression) extends UnaryExpression {
 object TokenCount {
 
   /** Number of maximal `[a-z0-9]` runs in the lowercased string. */
-  def count(s: UTF8String): Int = {
-    val b = s.toLowerCase.getBytes
+  def count(s: UTF8String): Int = count(s.toLowerCase.getBytes)
+
+  /** Number of maximal `[a-z0-9]` runs in already lowercased bytes. */
+  def count(b: Array[Byte]): Int = {
     var n = 0
     var in = false
     var i = 0

@@ -24,8 +24,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: every round is one (seed, node)-keyed equi-join plus
   * one keyed aggregation; frames are (seed × reached-neighborhood)-
-  * sized; a `localCheckpoint` per generation, each held as the result
-  * reads them all ([[Cuts]]).
+  * sized; a `localCheckpoint` per generation. The result reads every
+  * backward generation, which stay held; the forward levels and the
+  * undirected edge cut are released once the backward sweep has cut
+  * its last generation ([[Cuts]]).
   * Overflow ledger: `σ_v·(10⁶ + δ_q(w)) < 2⁶³` — σ grows with the
   * path-multiplicity of the graph, so the hop cap (≤ 4) is load-
   * bearing; callers on path-dense graphs lower it.
@@ -46,50 +48,54 @@ object Betweenness {
     val und = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
       .distinct()
       .localCheckpoint()
-    // forward: levels(d) = (s, node, sigma)
-    var levels = Vector(
-      seeds.toDF("node").distinct()
-        .select(col("node").as("s"), col("node"), lit(1L).as("sigma"))
-        .localCheckpoint())
-    var known = levels(0).select(col("s"), col("node"))
-    (1 to hops).foreach { _ =>
-      val next = levels.last
-        .join(und, col("node") === col("u"))
-        .groupBy(col("s"), col("v"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .select(col("s"), col("v").as("node"), col("sigma"))
-        .join(known, Seq("s", "node"), "left_anti")
-        .localCheckpoint()
-      levels = levels :+ next
-      known = known.unionAll(next.select(col("s"), col("node")))
+    Cuts.scoped(und) { und =>
+      // forward: levels(d) = (s, node, sigma)
+      var levels = Vector(
+        seeds.toDF("node").distinct()
+          .select(col("node").as("s"), col("node"), lit(1L).as("sigma"))
+          .localCheckpoint())
+      var known = levels(0).select(col("s"), col("node"))
+      (1 to hops).foreach { _ =>
+        val next = levels.last
+          .join(und, col("node") === col("u"))
+          .groupBy(col("s"), col("v"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .select(col("s"), col("v").as("node"), col("sigma"))
+          .join(known, Seq("s", "node"), "left_anti")
+          .localCheckpoint()
+        levels = levels :+ next
+        known = known.unionAll(next.select(col("s"), col("node")))
+      }
+      // backward: delta(d) = (s, node, sigma, dq)
+      var delta = levels(hops).withColumn("dq", lit(0L)).localCheckpoint()
+      var acc = delta.select(col("s"), col("node"), col("dq"))
+      (hops - 1 to 0 by -1).foreach { d =>
+        val succ = delta
+          .select(col("s").as("__s"), col("node").as("__w"),
+            col("sigma").as("__sw"), col("dq").as("__dw"))
+        val contrib = levels(d)
+          .join(und, levels(d)("node") === col("u"))
+          .join(succ, col("v") === col("__w") && col("s") === col("__s"))
+          .select(col("s"), col("node"), col("sigma"),
+            expr("sigma * (1000000 + __dw) div __sw").as("__c"))
+          .groupBy(col("s"), col("node"), col("sigma"))
+          .agg(sum(col("__c")).as("__cs"))
+        val lvl = levels(d)
+          .join(contrib.select(col("s"), col("node"), col("__cs")),
+            Seq("s", "node"), "left")
+          .select(col("s"), col("node"), col("sigma"),
+            coalesce(col("__cs"), lit(0L)).as("dq"))
+          .localCheckpoint()
+        delta = lvl
+        acc = acc.unionAll(lvl.select(col("s"), col("node"), col("dq")))
+      }
+      // the backward generations hold every level's dependencies
+      levels.foreach(Cuts.release)
+      acc
+        .filter(col("node") =!= col("s"))
+        .groupBy(col("node")).agg(sum(col("dq")).as("bc_q"))
+        .filter(col("bc_q") > 0)
     }
-    // backward: delta(d) = (s, node, sigma, dq)
-    var delta = levels(hops).withColumn("dq", lit(0L)).localCheckpoint()
-    var acc = delta.select(col("s"), col("node"), col("dq"))
-    (hops - 1 to 0 by -1).foreach { d =>
-      val succ = delta
-        .select(col("s").as("__s"), col("node").as("__w"),
-          col("sigma").as("__sw"), col("dq").as("__dw"))
-      val contrib = levels(d)
-        .join(und, levels(d)("node") === col("u"))
-        .join(succ, col("v") === col("__w") && col("s") === col("__s"))
-        .select(col("s"), col("node"), col("sigma"),
-          expr("sigma * (1000000 + __dw) div __sw").as("__c"))
-        .groupBy(col("s"), col("node"), col("sigma"))
-        .agg(sum(col("__c")).as("__cs"))
-      val lvl = levels(d)
-        .join(contrib.select(col("s"), col("node"), col("__cs")),
-          Seq("s", "node"), "left")
-        .select(col("s"), col("node"), col("sigma"),
-          coalesce(col("__cs"), lit(0L)).as("dq"))
-        .localCheckpoint()
-      delta = lvl
-      acc = acc.unionAll(lvl.select(col("s"), col("node"), col("dq")))
-    }
-    acc
-      .filter(col("node") =!= col("s"))
-      .groupBy(col("node")).agg(sum(col("dq")).as("bc_q"))
-      .filter(col("bc_q") > 0)
   }
 
   /** DuckDB oracle for [[fromSeeds]]: forward levels and backward

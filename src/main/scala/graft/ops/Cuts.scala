@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Lifetimes of `localCheckpoint`ed frames, the lineage cuts of the
   * iterative operators. A cut's blocks go only when released, or when a
@@ -11,11 +12,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * result reads only the last one, runs through [[generations]]; a cut
   * that only such a loop or another eager body reads is [[scoped]].
   * Hand-written, as the loop form does not fit them: [[Betweenness]]
-  * and [[Walks]], whose results read every generation of a chain; and
-  * [[PageRank.hits]] (hub and auth), `SuffixArray.globalRanks`'
-  * distributed loop (rank arrays and active buckets) and [[Mst.boruvka]]
-  * (forest and component labels), which advance two chains together.
-  * Of these only `hits` and `globalRanks` [[release]] their cuts yet. */
+  * and [[Walks]], whose results read every generation of a chain and
+  * which scope their leaf cuts; and [[PageRank.hits]] (hub and auth),
+  * `SuffixArray.globalRanks`' distributed loop (rank arrays and active
+  * buckets) and [[Mst.boruvka]] (forest and component labels), which
+  * advance two chains together and release each superseded generation
+  * themselves. */
 private[graft] object Cuts {
 
   /** Drops the blocks of `cut`, a frame returned by `localCheckpoint()`.
@@ -26,6 +28,17 @@ private[graft] object Cuts {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
     case p => throw new IllegalArgumentException(
       s"not a checkpointed frame: ${p.nodeName}")
+  }
+
+  /** Cuts `frame` with an eager `localCheckpoint`, then drops `dead`:
+    * cuts, or persisted frames, that only `frame`'s plan read. */
+  def superseding(frame: DataFrame, dead: DataFrame*): DataFrame = {
+    val cut = frame.localCheckpoint()
+    dead.foreach { d =>
+      if (d.storageLevel != StorageLevel.NONE) d.unpersist(blocking = false)
+      else release(d)
+    }
+    cut
   }
 
   /** Runs `body` over `cut`, a `localCheckpoint`ed frame, and releases
@@ -49,9 +62,7 @@ private[graft] object Cuts {
     var r = 0
     while (!done(g, r) && r < rounds) {
       r += 1
-      val next = step(g, r).localCheckpoint()
-      release(g)
-      g = next
+      g = superseding(step(g, r), g)
     }
     g
   }

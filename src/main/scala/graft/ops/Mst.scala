@@ -51,42 +51,54 @@ object Mst {
         col(weightCol).cast("long").as("w"))
       .groupBy(col("a"), col("b")).agg(min(col("w")).as("w"))
       .localCheckpoint()
-    val nodes = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node"))).distinct()
-      .localCheckpoint()
-    var comp = nodes.select(col("node"), col("node").as("c"))
-    var mst = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("a", LongType), StructField("b", LongType),
-        StructField("w", LongType))))
-    var done = false
-    (1 to rounds).foreach { _ =>
-      if (!done) {
-        val ca = comp.select(col("node").as("a"), col("c").as("__ca"))
-        val cb = comp.select(col("node").as("b"), col("c").as("__cb"))
-        val ce = e.join(ca, "a").join(cb, "b")
-          .filter(col("__ca") =!= col("__cb"))
-          .localCheckpoint()
-        if (ce.isEmpty) done = true
-        else {
-          val pick = struct(col("w"), col("a"), col("b"))
-          val chosen = ce.select(col("__ca").as("__c"), pick.as("__e"))
-            .unionAll(ce.select(col("__cb").as("__c"), pick.as("__e")))
-            .groupBy(col("__c")).agg(min(col("__e")).as("__e"))
-            .select(col("__e.a").as("a"), col("__e.b").as("b"),
-              col("__e.w").as("w"))
-            .distinct()
-          mst = mst.unionAll(chosen).localCheckpoint()
-          val cc = graft.dedup.NearDup
-            .connectedComponents(mst, "a", "b")
-            .select(col("node"), col("cluster_id").as("__cc"))
-          comp = nodes.join(cc, Seq("node"), "left")
-            .select(col("node"), coalesce(col("__cc"), col("node")).as("c"))
-            .localCheckpoint()
+    Cuts.scoped(e) { e =>
+      val nodes = e.select(col("a").as("node"))
+        .unionAll(e.select(col("b").as("node"))).distinct()
+        .localCheckpoint()
+      Cuts.scoped(nodes) { nodes =>
+        // each round supersedes the last forest, labelling and
+        // candidate cut; the result reads only the last forest
+        var comp = nodes.select(col("node"), col("node").as("c"))
+        var labelled = false
+        var mst = spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(Seq(StructField("a", LongType),
+            StructField("b", LongType), StructField("w", LongType))))
+        var done = false
+        (1 to rounds).foreach { _ =>
+          if (!done) {
+            val ca = comp.select(col("node").as("a"), col("c").as("__ca"))
+            val cb = comp.select(col("node").as("b"), col("c").as("__cb"))
+            val ce = e.join(ca, "a").join(cb, "b")
+              .filter(col("__ca") =!= col("__cb"))
+              .localCheckpoint()
+            if (ce.isEmpty) { done = true; Cuts.release(ce) }
+            else {
+              val pick = struct(col("w"), col("a"), col("b"))
+              val chosen = ce.select(col("__ca").as("__c"), pick.as("__e"))
+                .unionAll(ce.select(col("__cb").as("__c"), pick.as("__e")))
+                .groupBy(col("__c")).agg(min(col("__e")).as("__e"))
+                .select(col("__e.a").as("a"), col("__e.b").as("b"),
+                  col("__e.w").as("w"))
+                .distinct()
+              mst = Cuts.superseding(mst.unionAll(chosen), mst, ce)
+              val cc = graft.dedup.NearDup
+                .connectedComponents(mst, "a", "b")
+                .select(col("node"), col("cluster_id").as("__cc"))
+              val next = nodes.join(cc, Seq("node"), "left")
+                .select(col("node"),
+                  coalesce(col("__cc"), col("node")).as("c"))
+              comp =
+                if (labelled) Cuts.superseding(next, comp)
+                else next.localCheckpoint()
+              labelled = true
+            }
+          }
         }
+        if (labelled) Cuts.release(comp)
+        mst
       }
     }
-    mst
   }
 
   /** DuckDB oracle for [[boruvka]]: Kruskal replayed over the identical

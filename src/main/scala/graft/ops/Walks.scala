@@ -26,7 +26,8 @@ import graft.functions.Hash64
   * modulus, then (node, pick)→ranked-neighbor) — the frontier is
   * |starts|·walksPerNode rows regardless of step, nothing fans out,
   * nothing is collected. A `localCheckpoint` per generation truncates
-  * the lineage, each held as the result reads them all ([[Cuts]]).
+  * the lineage, each held as the result reads them all; the neighbor
+  * and degree cuts live for the loop ([[Cuts.scoped]]).
   * Walks that reach a sink node (no out-edges) simply end — the honest
   * dangling-node verdict.
   */
@@ -52,29 +53,33 @@ object Walks {
       .localCheckpoint()
     val deg = e.groupBy(col("u")).agg(count(lit(1)).as("outdeg"))
       .localCheckpoint()
-    var frontier = e.select(col("u").as("start")).distinct()
-      .select(col("start"),
-        explode(sequence(lit(1L), lit(walksPerNode.toLong))).as("walk"))
-      .select(col("start"), col("walk"), lit(0L).as("step"),
-        col("start").as("node"))
-      .localCheckpoint()
-    var out = frontier
-    (1 to steps).foreach { t =>
-      val pick = Hash64.hash60(concat_ws(":", lit(salt), col("start"),
-        col("walk"), lit(t))) % col("outdeg") + 1L
-      val ranked = nbr.select(col("u").as("__nu"), col("v").as("__nv"),
-        col("rn").as("__nrn"))
-      frontier = frontier
-        .join(deg, col("node") === col("u"))
-        .withColumn("__pick", pick)
-        .join(ranked, col("node") === col("__nu") &&
-          col("__pick") === col("__nrn"))
-        .select(col("start"), col("walk"), lit(t.toLong).as("step"),
-          col("__nv").as("node"))
-        .localCheckpoint()
-      out = out.unionAll(frontier)
+    Cuts.scoped(nbr) { nbr =>
+      Cuts.scoped(deg) { deg =>
+        var frontier = e.select(col("u").as("start")).distinct()
+          .select(col("start"),
+            explode(sequence(lit(1L), lit(walksPerNode.toLong))).as("walk"))
+          .select(col("start"), col("walk"), lit(0L).as("step"),
+            col("start").as("node"))
+          .localCheckpoint()
+        var out = frontier
+        (1 to steps).foreach { t =>
+          val pick = Hash64.hash60(concat_ws(":", lit(salt), col("start"),
+            col("walk"), lit(t))) % col("outdeg") + 1L
+          val ranked = nbr.select(col("u").as("__nu"), col("v").as("__nv"),
+            col("rn").as("__nrn"))
+          frontier = frontier
+            .join(deg, col("node") === col("u"))
+            .withColumn("__pick", pick)
+            .join(ranked, col("node") === col("__nu") &&
+              col("__pick") === col("__nrn"))
+            .select(col("start"), col("walk"), lit(t.toLong).as("step"),
+              col("__nv").as("node"))
+            .localCheckpoint()
+          out = out.unionAll(frontier)
+        }
+        out
+      }
     }
-    out
   }
 
   /** DuckDB oracle for [[deterministicWalks]]: `edgesSql` yields

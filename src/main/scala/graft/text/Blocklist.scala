@@ -1,7 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.functions.DocGates
 
 /** Multi-token PHRASE blocklist matching — the curation gate behind
   * "drop documents hitting a banned-phrase list" (profanity, boilerplate
@@ -13,14 +15,15 @@ import org.apache.spark.sql.functions._
   * verdict is case/punctuation-stable.
   *
   * Plan shape: ZERO SHUFFLES — the blocklist is a plan-build-time
-  * literal (kilobytes), so everything is per-row array arithmetic: per
-  * DISTINCT phrase length L (bounded by the blocklist, not the
-  * corpus), the doc's L-grams come from an index `transform` + `slice`
-  * and are counted against the phrase set with `filter`/`array_sort`.
-  * No explode, no window, no join — the op is a pure projection, which
-  * is also what makes it directly usable on a STREAMING frame (the
-  * tokenize-the-stream convention). Zero-hit documents pass through
-  * with zeros — the common case a curation pipeline must not disturb.
+  * literal (kilobytes), so the op is one projection: the codegen'd
+  * [[graft.functions.DocGates]] kernel tokenizes each row once, interns
+  * its tokens and counts every phrase's occurrences over the row's
+  * token positions. No explode, no window, no join — which is also what
+  * makes it directly usable on a STREAMING frame (the
+  * tokenize-the-stream convention). Zero-hit and null-text documents
+  * pass through with zeros — the common case a curation pipeline must
+  * not disturb. The DuckDB oracle keeps the gram form: per phrase
+  * length L, the doc's L-grams counted against the phrase set.
   *
   * Phrases are tokenized by the SAME tokenizer at plan-build time;
   * phrases that normalize to nothing are dropped. Overlapping and
@@ -35,33 +38,38 @@ object Blocklist {
       .filter(_.nonEmpty)
       .distinct
 
-  /** @return one row per input doc: (idCol, n_hits, n_phrases, blocked)
+  /** Plan: one projection of the codegen'd [[graft.functions.DocGates]]
+    * kernel's hit counts. The higher-order-function route it replaced
+    * (per phrase length L, the doc's L-grams from an index `transform`
+    * + `slice`, filtered against the phrase set) is kept in the test
+    * sources as the reference it must reproduce row for row.
+    *
+    * @return one row per input doc: (idCol, n_hits, n_phrases, blocked)
     *         — n_hits counts every occurrence (all phrases, all start
     *         positions), n_phrases the distinct phrases present */
   def phraseHits(docs: DataFrame, idCol: String, textCol: String,
       phrases: Seq[String]): DataFrame = {
-    val plist = phraseTokens(phrases)
-    require(plist.nonEmpty, "empty blocklist")
-    // per length L: the matched-phrase multiset over all start
-    // positions, as an array column (one per L, concatenated)
-    val matchesByLen = plist.map(_.length).distinct.sorted.map { l =>
-      val pset = plist.filter(_.length == l).map(_.mkString(" "))
-      // guard: sequence(1, n) DESCENDS when n < 1 — docs shorter than
-      // L have no L-grams, full stop
-      val grams = when(size(col("__toks")) >= l,
-        transform(sequence(lit(1), size(col("__toks")) - (l - 1)),
-          i => concat_ws(" ", slice(col("__toks"), i, lit(l)))))
-        .otherwise(expr("CAST(array() AS ARRAY<STRING>)"))
-      filter(grams, g => pset.map(p => g === p).reduce(_ || _))
-    }
+    val k = col("__k")
     docs
-      .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__toks"))
-      .withColumn("__hits", concat(matchesByLen: _*))
-      .select(col(idCol),
-        size(col("__hits")).cast("long").as("n_hits"),
-        size(array_distinct(col("__hits"))).cast("long").as("n_phrases"))
+      .select(col(idCol), DocGates.docGates(col(textCol), Nil,
+        nonEmptyPhraseTokens(phrases), Nil).as("__k"))
+      .select(col(idCol), coalesce(k("n_hits"), lit(0L)).as("n_hits"),
+        coalesce(k("n_phrases"), lit(0L)).as("n_phrases"))
       .withColumn("blocked", col("n_hits") > 0L)
   }
+
+  /** [[phraseTokens]], which must not be empty. */
+  private[text] def nonEmptyPhraseTokens(
+      phrases: Seq[String]): Seq[Seq[String]] = {
+    val plist = phraseTokens(phrases)
+    require(plist.nonEmpty, "empty blocklist")
+    plist
+  }
+
+  /** Whether a [[graft.functions.DocGates]] struct counted any phrase
+    * hit: [[phraseHits]]' `blocked`. */
+  private[text] def blockedOf(k: Column): Column =
+    coalesce(k("n_hits"), lit(0L)) > 0L
 
   /** DuckDB oracle for [[phraseHits]] — identical token grams per
     * length and the same phrase list. `toksSql` mirrors

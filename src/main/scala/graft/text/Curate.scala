@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.dedup.NearDup
-import graft.functions.Hash64
+import graft.functions.{DocGates, Hash64}
 import graft.ops.{Cuts, Sampling}
 
 /** The ONE-PLAN curation pipeline (round-9 item 3) — the round-8 gates
@@ -21,18 +21,22 @@ import graft.ops.{Cuts, Sampling}
   * total attrition.
   *
   * SHUFFLE BUDGET (the plan a 100 TB corpus build wants):
-  *  - Gopher rules and the blocklist are pure scan-side projections —
-  *    ZERO shuffles (q364/q379 plans, unchanged);
-  *  - repetition coverage shuffles tokens DOC-KEYED once, then every
-  *    window/agg reuses that partitioning (q377's plan);
+  *  - Gopher rules, repetition coverage and the blocklist are ONE
+  *    scan-side projection — ZERO shuffles: the codegen'd
+  *    [[graft.functions.DocGates]] kernel returns every count the three
+  *    gates read in one byte scan per row, and the same projection
+  *    carries the PII count (stage 6) and, for docs passing gates 1–3,
+  *    the dedup fingerprint (stage 5);
   *  - the KN gate is one bigram-vocabulary aggregation (model size is
   *    vocab², NOT corpus-sized) broadcast back, plus one doc-keyed
-  *    aggregation (q362's plan);
-  *  - the verdict joins are all doc-keyed equi-joins (co-partitioned
-  *    after AQE), the dedup is ONE fingerprint-keyed aggregation, and
-  *    the attrition readout is one 6-group aggregation plus a window
-  *    over the 6-row stage frame.
+  *    aggregation (q362's plan), and its doc-keyed equi-join to the
+  *    gate projection is the only verdict join of stages 1–4;
+  *  - the dedup is ONE fingerprint-keyed aggregation over the gate cut,
+  *    joined back by id, and the attrition readout is one 6-group
+  *    aggregation plus a window over the 6-row stage frame.
   *  Nothing is ever all-pairs, and no gate materializes the corpus.
+  *  Ids must be non-null and distinct: every gate reads one row as one
+  *  document.
   *
   * READ-ONCE INPUT: the multi-gate entry points ([[attrition]],
   * [[attritionBySource]], [[releaseVerdicts]]) DO materialize the
@@ -67,62 +71,93 @@ object Curate {
     6 -> "pii", 7 -> "decontam", 8 -> "near_dup")
 
   /** Per-document verdict frame: (idCol, n_tokens, stage) with stage ∈
-    * 1..5 for dropped docs (first failing stage) and NULL for
+    * 1..4 for dropped docs (first failing stage) and NULL for
     * survivors. The KN reference model trains on `knRef` — default the
     * input corpus itself (the q362 self-reference form); the streaming
     * sink passes a FIXED external reference so every epoch gates
     * against the same model (per-doc determinism = exact batch parity).
     * Docs the KN model cannot score (< 2 tokens) fail stage 4 unless an
-    * earlier gate already took them. */
+    * earlier gate already took them. Ids must be non-null and
+    * distinct. */
   def verdicts(docs: DataFrame, idCol: String, textCol: String,
       phrases: Seq[String], minTokens: Long = 50L,
       maxMeanBitsMicro: Long = 5500000L,
       repNs: Seq[Int] = Seq(5, 10),
-      knRef: Option[DataFrame] = None): DataFrame = {
-    val g = Gopher.ruleGates(docs, idCol, textCol, minTokens)
-      .select(col(idCol), col("n_tokens"), col("pass").as("__gp"))
-    val r = Gopher.dupNgramCoverage(docs, idCol, textCol, repNs)
-      .groupBy(col(idCol))
-      .agg((min(when(col("pass"), 1L).otherwise(0L)) === 1L).as("__rp"))
-    val b = Blocklist.phraseHits(docs, idCol, textCol, phrases)
-      .select(col(idCol), col("blocked").as("__bl"))
-    val k = LangModel.kneserNeyScore(docs, idCol, textCol,
-        knRef.getOrElse(docs), textCol)
-      .select(col(idCol), col("mean_bits_micro").as("__kb"))
-    g.join(r, Seq(idCol)).join(b, Seq(idCol))
-      .join(k, Seq(idCol), "left")
+      knRef: Option[DataFrame] = None): DataFrame =
+    gateVerdicts(docs, idCol, textCol, phrases, minTokens,
+      maxMeanBitsMicro, repNs, knRef)._1
+      .select(col(idCol), col("n_tokens"), col("stage"))
+
+  /** [[verdicts]] from ONE projection of `docs`: the
+    * [[graft.functions.DocGates]] kernel decides gates 1–3 in the row,
+    * beside the PII count (`__pii`, stage 6) and, for docs that pass
+    * gates 1–3, the dedup fingerprint (`__fp`, stage 5); only the KN
+    * score (stage 4) joins. Returns the frame (idCol, n_tokens, stage,
+    * __pii, __fp) and the KN model's held frames, dead once a cut of the
+    * frame exists. */
+  private def gateVerdicts(docs: DataFrame, idCol: String,
+      textCol: String, phrases: Seq[String], minTokens: Long,
+      maxMeanBitsMicro: Long, repNs: Seq[Int],
+      knRef: Option[DataFrame]): (DataFrame, Seq[DataFrame]) = {
+    val text = col(textCol)
+    val k = col("__k")
+    val (kn, held) = LangModel.kneserNeyScoreHeld(docs, idCol, textCol,
+      knRef.getOrElse(docs), textCol)
+    val s13 = when(!Gopher.rulePass(Gopher.statOf(k), minTokens), 1)
+      .when(!Gopher.repetitionPass(k, repNs), 2)
+      .when(Blocklist.blockedOf(k), 3)
+    val gates = docs
+      .select(col(idCol), text.as("__t"),
+        DocGates.docGates(text, repNs,
+          Blocklist.nonEmptyPhraseTokens(phrases), TextAnalysis.stopEn)
+          .as("__k"))
+      .select(col(idCol),
+        Gopher.statOf(k)("n_tokens").as("n_tokens"), s13.as("__s"),
+        (Scrub.countEmails(col("__t")) + Scrub.countIps(col("__t")) +
+          Scrub.countPhones(col("__t"))).cast("long").as("__pii"),
+        when(s13.isNull, TextAnalysis.fingerprint(col("__t"))).as("__fp"))
+    val frame = gates
+      .join(kn.select(col(idCol), col("mean_bits_micro").as("__kb")),
+        Seq(idCol), "left")
       .select(col(idCol), col("n_tokens"),
-        when(!col("__gp"), 1)
-          .when(!col("__rp"), 2)
-          .when(col("__bl"), 3)
-          .when(!coalesce(col("__kb") <= maxMeanBitsMicro, lit(false)), 4)
-          .cast("int").as("stage"))
+        coalesce(col("__s"),
+          when(!coalesce(col("__kb") <= maxMeanBitsMicro, lit(false)), 4))
+          .cast("int").as("stage"),
+        col("__pii"), col("__fp"))
+    (frame, held)
   }
 
   /** [[verdicts]] extended through the dedup stage: gate-passers that
     * are a later exact copy (normalized fingerprint, keep lowest id)
-    * get stage 5; survivors keep stage NULL. */
+    * get stage 5; survivors keep stage NULL. With `withPii` the frame
+    * also carries the stage-6 PII count `__pii`. Returns the frame and
+    * the gate cut it reads, which is dead once a cut of the frame
+    * exists. */
   private def verdictsWithDedup(docs: DataFrame, idCol: String,
       textCol: String, phrases: Seq[String], minTokens: Long,
       maxMeanBitsMicro: Long, repNs: Seq[Int],
-      knRef: Option[DataFrame] = None): DataFrame = {
+      knRef: Option[DataFrame] = None,
+      withPii: Boolean = false): (DataFrame, DataFrame) = {
     // the gate frame feeds BOTH the keep-first arm and the final join —
-    // left lazy, the four stage-1–4 gates (repetition coverage and the
-    // KN model are the expensive ones) execute twice per query; the
-    // frame is 3 narrow columns, so the eager cut is the q401 lineage
-    // recipe applied one level down
-    val v = verdicts(docs, idCol, textCol, phrases, minTokens,
-      maxMeanBitsMicro, repNs, knRef).localCheckpoint()
+    // left lazy, the stage-1–4 gates (the KN model is the expensive
+    // one) execute twice per query; the frame is narrow, so the eager
+    // cut is the q401 lineage recipe applied one level down, and the
+    // KN model's stored frames are dead once it exists
+    val (g, held) = gateVerdicts(docs, idCol, textCol, phrases, minTokens,
+      maxMeanBitsMicro, repNs, knRef)
+    val carried = if (withPii) Seq(col("__pii")) else Nil
+    val v = Cuts.superseding(
+      g.select(Seq(col(idCol), col("n_tokens"), col("stage"),
+        col("__fp")) ++ carried: _*), held: _*)
     val keep = v.filter(col("stage").isNull)
-      .join(docs.select(col(idCol), col(textCol)), Seq(idCol))
-      .withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
       .groupBy(col("__fp"))
       .agg(min(col(idCol)).as("__keep_id"))
       .select(col("__keep_id").as(idCol), lit(true).as("__kept"))
-    v.join(keep, Seq(idCol), "left")
-      .select(col(idCol), col("n_tokens"),
+    (v.join(keep, Seq(idCol), "left")
+      .select(Seq(col(idCol), col("n_tokens"),
         coalesce(col("stage"),
-          when(col("__kept").isNull, 5)).cast("int").as("stage"))
+          when(col("__kept").isNull, 5)).cast("int").as("stage")) ++
+        carried: _*), v)
   }
 
   /** Surviving corpus with split assignment:
@@ -136,7 +171,7 @@ object Curate {
       knRef: Option[DataFrame] = None): DataFrame =
     Sampling.assignSplit(
       verdictsWithDedup(docs, idCol, textCol, phrases, minTokens,
-        maxMeanBitsMicro, repNs, knRef).filter(col("stage").isNull)
+        maxMeanBitsMicro, repNs, knRef)._1.filter(col("stage").isNull)
         .select(col(idCol), col("n_tokens")),
       col(idCol), salt, splits)
       .select(col(idCol), col("n_tokens"), col("split"))
@@ -155,10 +190,10 @@ object Curate {
     withInputOnce(docs, idCol, textCol) { in =>
       // the datasheet readout references the per-doc frame twice
       // (per-stage drops + totals) — cut it so the dedup tail runs once;
-      // the cut is the last read of `in`
-      datasheetFrom(verdictsWithDedup(in, idCol, textCol, phrases,
-        minTokens, maxMeanBitsMicro, repNs, knRef).localCheckpoint(),
-        stageNames)
+      // the cut is the last read of `in` and of the gate cut
+      val (pd, v) = verdictsWithDedup(in, idCol, textCol, phrases,
+        minTokens, maxMeanBitsMicro, repNs, knRef)
+      datasheetFrom(Cuts.superseding(pd, v), stageNames)
     }
 
   /** READ-ONCE INPUT for an entry point whose gates each read `docs`:
@@ -227,12 +262,12 @@ object Curate {
       repNs: Seq[Int] = Seq(5, 10),
       knRef: Option[DataFrame] = None): DataFrame =
     withInputOnce(docs, idCol, textCol) { in =>
+      val (pd, v) = verdictsWithDedup(in, idCol, textCol, phrases,
+        minTokens, maxMeanBitsMicro, repNs, knRef)
       datasheetBySourceFrom(
-        verdictsWithDedup(in, idCol, textCol, phrases, minTokens,
-          maxMeanBitsMicro, repNs, knRef)
-          .join(srcFrame.select(col(idCol), col(srcCol).as("source")),
-            Seq(idCol))
-          .localCheckpoint(), // the readout references it twice
+        Cuts.superseding( // the readout references it twice
+          pd.join(srcFrame.select(col(idCol), col(srcCol).as("source")),
+            Seq(idCol)), v),
         stageNames)
     }
 
@@ -424,10 +459,10 @@ object Curate {
     * SHUFFLE BUDGET on top of the stage-1–5 plan: every gate reads
     * the ONE read-once `(idCol, textCol)` frame ([[withInputOnce]]), so
     * the input is scanned and its plan built once per call, not once
-    * per gate (Gopher rules, repetition, blocklist, KN score and
-    * reference, the dedup keep-join, PII, decontamination and the
-    * near-dup survivor join all read it). The PII gate is a pure
-    * projection of that frame (zero shuffles); decontamination is one
+    * per gate (the gate projection, KN score and reference,
+    * decontamination and the near-dup survivor join all read it). The
+    * PII count rides in the gate projection and the stage-≤5 cut (zero
+    * shuffles, no join); decontamination is one
     * shingle-keyed equi-join (benchmark side tiny → AQE broadcast) +
     * one doc-keyed count; near-dup — the only expensive stage — runs
     * its one signature aggregation and banding self-join over STAGE-≤7
@@ -435,17 +470,19 @@ object Curate {
     * bounded by true near-duplicates (LSH bands, never all-pairs).
     *
     * EAGERNESS: the read-once frame is cut (one job) before the first
-    * gate. Stages 1–7 stay one plan over it, `localCheckpoint`ed
-    * before stage 8's bounded iterative CC loop (O(log diameter) rounds
-    * over the PAIR frame, never the corpus) — the verdict frame feeds
-    * both the signature arm and the final verdict join, and without the
-    * cut each CC action would replay the whole gate pipeline (the q401
-    * lineage lesson). The signature frame is persisted for its three
-    * uses (banding + two verify joins). Both are released right after
-    * the CC loop, the last reader of the input: the returned frame
-    * reads only the checkpointed stage-≤7 verdicts and CC labels, so no
-    * caller cache contract is needed. A cache the caller put on `docs`
-    * feeds the cut and is left in place.
+    * gate. Stages 1–4 are cut once (the KN model's stored frames are
+    * released then), and stages 5–7 over that cut are cut again before
+    * stage 8's bounded iterative CC loop (O(log diameter) rounds over
+    * the PAIR frame, never the corpus), which releases the stage-≤5 cut
+    * — the verdict frame feeds both the signature arm and the final
+    * verdict join, and without the cut each CC action would replay the
+    * whole gate pipeline (the q401 lineage lesson). The signature frame
+    * is persisted for its three uses (banding + two verify joins). It
+    * and the input are released right after the CC loop, the last
+    * reader of the input: the returned frame reads only the
+    * checkpointed stage-≤7 verdicts and CC labels, so no caller cache
+    * contract is needed. A cache the caller put on `docs` feeds the cut
+    * and is left in place.
     *
     * @param benchmark evaluation set to decontaminate against
     *        (idCol, textCol)
@@ -456,22 +493,29 @@ object Curate {
       repNs: Seq[Int] = Seq(5, 10), knRef: Option[DataFrame] = None,
       maxPiiHits: Long = 0L, decontamW: Int = 13,
       minAgree16: Int = 8): DataFrame =
+    releaseVerdictsHeld(docs, idCol, textCol, phrases, benchmark,
+      minTokens, maxMeanBitsMicro, repNs, knRef, maxPiiHits, decontamW,
+      minAgree16)._1
+
+  /** [[releaseVerdicts]] and the stage-≤7 cut it reads, which is dead
+    * once a cut of the verdicts exists. */
+  private def releaseVerdictsHeld(docs: DataFrame, idCol: String,
+      textCol: String, phrases: Seq[String], benchmark: DataFrame,
+      minTokens: Long, maxMeanBitsMicro: Long, repNs: Seq[Int],
+      knRef: Option[DataFrame], maxPiiHits: Long, decontamW: Int,
+      minAgree16: Int): (DataFrame, DataFrame) =
     withInputOnce(docs, idCol, textCol) { in =>
-      val v5 = verdictsWithDedup(in, idCol, textCol, phrases, minTokens,
-        maxMeanBitsMicro, repNs, knRef)
-      val pii = in.select(col(idCol),
-        (Scrub.countEmails(col(textCol)) + Scrub.countIps(col(textCol)) +
-          Scrub.countPhones(col(textCol))).cast("long").as("__pii"))
+      val (v5, v) = verdictsWithDedup(in, idCol, textCol, phrases,
+        minTokens, maxMeanBitsMicro, repNs, knRef, withPii = true)
       val contam = Decontaminate.overlap(in, benchmark, idCol, textCol,
           w = decontamW)
         .select(col(idCol), lit(true).as("__ct"))
-      val v7 = v5.join(pii, Seq(idCol))
+      val v7 = Cuts.superseding(v5
         .join(contam, Seq(idCol), "left")
         .select(col(idCol), col("n_tokens"),
           coalesce(col("stage"),
             when(col("__pii") > maxPiiHits, 6),
-            when(col("__ct"), 7)).cast("int").as("stage"))
-        .localCheckpoint()
+            when(col("__ct"), 7)).cast("int").as("stage")), v)
       val survTexts = v7.filter(col("stage").isNull).select(col(idCol))
         .join(in, Seq(idCol))
       val sig = NearDup.minhashSignatures(survTexts, idCol, textCol)
@@ -491,10 +535,10 @@ object Curate {
       sig.unpersist()
       val dropped = clusters.filter(!col("keep"))
         .select(col("node").as(idCol), lit(true).as("__nd"))
-      v7.join(dropped, Seq(idCol), "left")
+      (v7.join(dropped, Seq(idCol), "left")
         .select(col(idCol), col("n_tokens"),
           coalesce(col("stage"), when(col("__nd"), 8))
-            .cast("int").as("stage"))
+            .cast("int").as("stage")), v7)
     }
 
   /** The release DATASHEET: [[attrition]]'s shape over the 8-stage
@@ -504,12 +548,14 @@ object Curate {
       minTokens: Long = 50L, maxMeanBitsMicro: Long = 5500000L,
       repNs: Seq[Int] = Seq(5, 10), knRef: Option[DataFrame] = None,
       maxPiiHits: Long = 0L, decontamW: Int = 13,
-      minAgree16: Int = 8): DataFrame =
+      minAgree16: Int = 8): DataFrame = {
     // the readout references the per-doc frame twice — cut it so the
     // post-v7 near-dup verdict join runs once
-    datasheetFrom(releaseVerdicts(docs, idCol, textCol, phrases,
+    val (pd, v7) = releaseVerdictsHeld(docs, idCol, textCol, phrases,
       benchmark, minTokens, maxMeanBitsMicro, repNs, knRef, maxPiiHits,
-      decontamW, minAgree16).localCheckpoint(), releaseStageNames)
+      decontamW, minAgree16)
+    datasheetFrom(Cuts.superseding(pd, v7), releaseStageNames)
+  }
 
   /** The released corpus with split assignment over the 8-stage
     * pipeline: (idCol, n_tokens, split). */
@@ -566,15 +612,16 @@ object Curate {
       minTokens: Long = 50L, maxMeanBitsMicro: Long = 5500000L,
       repNs: Seq[Int] = Seq(5, 10), knRef: Option[DataFrame] = None,
       maxPiiHits: Long = 0L, decontamW: Int = 13,
-      minAgree16: Int = 8): DataFrame =
+      minAgree16: Int = 8): DataFrame = {
+    val (pd, v7) = releaseVerdictsHeld(docs, idCol, textCol, phrases,
+      benchmark, minTokens, maxMeanBitsMicro, repNs, knRef, maxPiiHits,
+      decontamW, minAgree16)
     datasheetBySourceFrom(
-      releaseVerdicts(docs, idCol, textCol, phrases, benchmark,
-        minTokens, maxMeanBitsMicro, repNs, knRef, maxPiiHits,
-        decontamW, minAgree16)
-        .join(srcFrame.select(col(idCol), col(srcCol).as("source")),
-          Seq(idCol))
-        .localCheckpoint(), // the readout references it twice
+      Cuts.superseding( // the readout references it twice
+        pd.join(srcFrame.select(col(idCol), col(srcCol).as("source")),
+          Seq(idCol)), v7),
       releaseStageNames)
+  }
 
   /** DuckDB oracle CTE chain for [[releaseVerdicts]] over `tableSql`
     * (yields (doc_id, text)) vs `benchSql` (same shape) — composes

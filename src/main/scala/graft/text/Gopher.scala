@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.DocGates
+
 /** Gopher-style RULE gates (Rae et al. 2021 §A1.1 adapted to the
   * harness corpus) — the hard-threshold curation companion to q20's
   * continuous quality score: five named pass/fail rules per document,
@@ -36,12 +38,53 @@ object Gopher {
     *        "punctuation", so the ASCII default would damn every
     *        non-ASCII letter — pass `unicodePunctRe` with
     *        `unicodeTokens`.
+    *
+    * Plan: with the default tokenizer and `asciiPunctRe`, the six stats
+    * are fields of the codegen'd [[graft.functions.DocGates]] kernel, one
+    * byte scan per row. Any other tokenizer or class takes the
+    * higher-order-function route ([[ruleGatesHof]]): the token array,
+    * then `aggregate`/`filter`/`array_intersect` over it and a
+    * `regexp_replace` count over the raw text. Both are pure
+    * projections, with the same rows and schema.
+    *
     * @return (idCol, n_tokens, sum_len, n_digit, n_stop, n_punct,
     *         n_chars, r_len, r_mean, r_digit, r_stop, r_punct, pass) */
   def ruleGates(docs: DataFrame, idCol: String, textCol: String,
       minTokens: Long = 50L, maxTokens: Long = 100000L,
-      tokenizer: Column => Column = TextAnalysis.tokens,
-      punctRe: String = asciiPunctRe): DataFrame = {
+      tokenizer: Column => Column = asciiTokens,
+      punctRe: String = asciiPunctRe): DataFrame =
+    if ((tokenizer eq asciiTokens) && punctRe == asciiPunctRe) {
+      val k = col("__k")
+      withVerdicts(docs
+        .select(col(idCol), DocGates.docGates(col(textCol), Nil, Nil,
+          TextAnalysis.stopEn).as("__k"))
+        .select(col(idCol) +: statNames.map(f => statOf(k)(f).as(f)): _*),
+        minTokens, maxTokens)
+    } else ruleGatesHof(docs, idCol, textCol, minTokens, maxTokens,
+      tokenizer, punctRe)
+
+  /** The default tokenizer of [[ruleGates]]: the one whose stats the
+    * kernel computes. */
+  private val asciiTokens: Column => Column = TextAnalysis.tokens
+
+  private val statNames = Seq("n_tokens", "sum_len", "n_digit", "n_stop",
+    "n_punct", "n_chars")
+
+  /** A [[ruleGates]] stat read from a [[graft.functions.DocGates]]
+    * struct `k`. For null text the struct is null, and the three counts
+    * the array route takes with `size` read as `size` of a null array
+    * does under the session's `spark.sql.legacy.sizeOfNull`. */
+  private[text] def statOf(k: Column)(name: String): Column = name match {
+    case "n_tokens" | "n_digit" | "n_stop" =>
+      coalesce(k(name), size(lit(null).cast("array<string>")).cast("long"))
+    case _ => k(name)
+  }
+
+  /** [[ruleGates]] over any tokenizer and punctuation class, by
+    * higher-order functions over the token array. */
+  private[graft] def ruleGatesHof(docs: DataFrame, idCol: String,
+      textCol: String, minTokens: Long, maxTokens: Long,
+      tokenizer: Column => Column, punctRe: String): DataFrame = {
     val toks = tokenizer(col(textCol))
     val base = docs.select(col(idCol), col(textCol).as("__t"),
       toks.as("__toks"))
@@ -58,19 +101,35 @@ object Gopher {
           length(regexp_replace(col("__t"), punctRe, "")))
           .cast("long").as("n_punct"),
         length(col("__t")).cast("long").as("n_chars"))
-    base
-      .withColumn("r_len",
-        col("n_tokens") >= minTokens && col("n_tokens") <= maxTokens)
-      .withColumn("r_mean",
-        lit(3L) * col("n_tokens") <= col("sum_len") &&
-          col("sum_len") <= lit(10L) * col("n_tokens"))
-      .withColumn("r_digit", lit(5L) * col("n_digit") <= col("n_tokens"))
-      .withColumn("r_stop", col("n_stop") >= 2L)
-      .withColumn("r_punct", lit(10L) * col("n_punct") <= col("n_chars"))
-      .withColumn("pass",
-        col("r_len") && col("r_mean") && col("r_digit") &&
-          col("r_stop") && col("r_punct"))
+    withVerdicts(base, minTokens, maxTokens)
   }
+
+  /** The six stat columns of `base` with the five rule verdicts and
+    * `pass`. */
+  private def withVerdicts(base: DataFrame, minTokens: Long,
+      maxTokens: Long): DataFrame =
+    base.select(col("*") +: ruleVerdicts(col, minTokens, maxTokens)
+      .map { case (name, c) => c.as(name) }: _*)
+
+  /** The five rule verdicts and their conjunction `pass`, over the six
+    * stats read through `stat`. */
+  private def ruleVerdicts(stat: String => Column, minTokens: Long,
+      maxTokens: Long): Seq[(String, Column)] = {
+    val n = stat("n_tokens")
+    val sumLen = stat("sum_len")
+    val rules = Seq(
+      "r_len" -> (n >= minTokens && n <= maxTokens),
+      "r_mean" -> (lit(3L) * n <= sumLen && sumLen <= lit(10L) * n),
+      "r_digit" -> (lit(5L) * stat("n_digit") <= n),
+      "r_stop" -> (stat("n_stop") >= 2L),
+      "r_punct" -> (lit(10L) * stat("n_punct") <= stat("n_chars")))
+    rules :+ ("pass" -> rules.map(_._2).reduce(_ && _))
+  }
+
+  /** [[ruleGates]]' `pass` over stats read through `stat`. */
+  private[text] def rulePass(stat: String => Column, minTokens: Long,
+      maxTokens: Long = 100000L): Column =
+    ruleVerdicts(stat, minTokens, maxTokens).last._2
 
   /** Gopher REPETITION rules (Rae et al. 2021 §A1.1, the other half of
     * [[ruleGates]]): per document and n-gram order n, the fraction of
@@ -82,68 +141,63 @@ object Gopher {
     * threshold (20−n)/100 (n=5 → 0.15 … n=10 → 0.10) decided by
     * integer cross-multiplication: `100·covered ≤ (20−n)·n_chars`.
     *
-    * Plan: ONE token posexplode reused across every n; per n, grams
-    * and their [s, e) spans come from a bounded n-row window frame
-    * (no self-join), within-doc duplication from a count over
-    * (doc, gram), and coverage from the classic islands merge (running
-    * max-end window). Spans start strictly increasing in token index,
-    * so the islands order is total — both engines merge identically.
-    * All shuffles are doc-keyed; nothing leaves its document.
+    * Plan: one projection and one generator, no shuffle. The codegen'd
+    * [[graft.functions.DocGates]] kernel tokenizes each row once and,
+    * per n, finds the grams occurring at least twice in the row and
+    * merges their spans (they start strictly increasing in token index,
+    * so the merge is one ordered pass); an `inline` then emits one row
+    * per n. The DuckDB oracle keeps the window form: spans from a
+    * bounded n-row window, duplicates from a count over (doc, gram),
+    * coverage from the islands merge.
+    *
+    * Ids must be non-null and distinct: each row is its own document
+    * here, where the window form merged the tokens of two rows sharing
+    * an id into one document.
     *
     * @return (idCol, n, n_chars, covered_chars, frac_micro, pass) —
     *         one row per doc per n; docs shorter than n tokens (or
-    *         empty) report covered 0 and pass */
+    *         empty or null) report covered 0 and pass */
   def dupNgramCoverage(docs: DataFrame, idCol: String, textCol: String,
       ns: Seq[Int] = Seq(5, 10)): DataFrame = {
-    require(ns.nonEmpty && ns.forall(n => n >= 2 && n <= 19))
-    val W = org.apache.spark.sql.expressions.Window
-    val src = docs.select(col(idCol),
-      TextAnalysis.tokens(col(textCol)).as("__toks"))
-    val tot = src.select(col(idCol),
-      length(concat_ws(" ", col("__toks"))).cast("long").as("n_chars"))
-    val tok = src
-      .select(col(idCol), posexplode(col("__toks")).as(Seq("i", "tok")))
-      .withColumn("s", coalesce(
-        sum(length(col("tok")).cast("long") + 1L)
-          .over(W.partitionBy(col(idCol)).orderBy(col("i"))
-            .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-    val perN = ns.map { n =>
-      val wf = W.partitionBy(col(idCol)).orderBy(col("i"))
-        .rowsBetween(0, n - 1)
-      val grams = tok.select(col(idCol), col("s"),
-          concat_ws(" ", collect_list(col("tok")).over(wf)).as("gram"),
-          count(lit(1)).over(wf).as("__k"),
-          max(col("s") + length(col("tok")).cast("long")).over(wf)
-            .as("e"))
-        .where(col("__k") === n)
-      val dup = grams
-        .withColumn("__c", count(lit(1))
-          .over(W.partitionBy(col(idCol), col("gram"))))
-        .where(col("__c") >= 2L)
-        .select(col(idCol), col("s"), col("e"))
-      val islands = dup
-        .withColumn("__brk", when(col("s") > coalesce(
-          max(col("e")).over(W.partitionBy(col(idCol)).orderBy(col("s"))
-            .rowsBetween(W.unboundedPreceding, -1)), lit(-1L)),
-          1L).otherwise(0L))
-        .withColumn("__g", sum(col("__brk"))
-          .over(W.partitionBy(col(idCol)).orderBy(col("s"))
-            .rowsBetween(W.unboundedPreceding, 0)))
-      val covered = islands.groupBy(col(idCol), col("__g"))
-        .agg((max(col("e")) - min(col("s"))).as("__cov"))
-        .groupBy(col(idCol))
-        .agg(sum(col("__cov")).as("covered_chars"))
-      tot.join(covered, Seq(idCol), "left")
-        .select(col(idCol), lit(n.toLong).as("n"), col("n_chars"),
-          coalesce(col("covered_chars"), lit(0L)).as("covered_chars"))
-    }
-    perN.reduce(_ unionAll _)
+    checkOrders(ns)
+    val k = col("__k")
+    val nChars = coalesce(k("tok_chars"), lit(0L))
+    docs
+      .select(col(idCol),
+        DocGates.docGates(col(textCol), ns, Nil, Nil).as("__k"))
+      .select(col(idCol), inline(array(ns.zipWithIndex.map { case (n, i) =>
+        struct(lit(n.toLong).as("n"), nChars.as("n_chars"),
+          coveredOf(k, i).as("covered_chars"))
+      }: _*)))
       .withColumn("frac_micro", when(col("n_chars") > 0L,
         expr("covered_chars * 1000000 div n_chars"))
         .otherwise(0L).cast("long"))
       .withColumn("pass",
-        lit(100L) * col("covered_chars") <=
-          (lit(20L) - col("n")) * col("n_chars"))
+        repetitionGate(col("n"), col("covered_chars"), col("n_chars")))
+  }
+
+  private def checkOrders(ns: Seq[Int]): Unit =
+    require(ns.nonEmpty && ns.forall(n => n >= 2 && n <= 19),
+      s"n-gram orders must lie in [2, 19]: $ns")
+
+  /** [[dupNgramCoverage]]'s gate at order `n`. */
+  private def repetitionGate(n: Column, covered: Column,
+      nChars: Column): Column =
+    lit(100L) * covered <= (lit(20L) - n) * nChars
+
+  /** Characters covered at the `i`-th order of a
+    * [[graft.functions.DocGates]] struct; 0 for null text. */
+  private def coveredOf(k: Column, i: Int): Column =
+    coalesce(k("covered")(i), lit(0L))
+
+  /** Whether every order of `ns` passes [[dupNgramCoverage]]'s gate, read
+    * from a [[graft.functions.DocGates]] struct built with `ns`. */
+  private[text] def repetitionPass(k: Column, ns: Seq[Int]): Column = {
+    checkOrders(ns)
+    val nChars = coalesce(k("tok_chars"), lit(0L))
+    ns.zipWithIndex.map { case (n, i) =>
+      repetitionGate(lit(n.toLong), coveredOf(k, i), nChars)
+    }.reduce(_ && _)
   }
 
   /** DuckDB oracle for [[dupNgramCoverage]] — identical token stream,

@@ -215,13 +215,14 @@ object LangModel {
     *         c12 ≥ `minCount` */
   def kneserNey(ref: DataFrame, textCol: String,
       minCount: Long = 2L): DataFrame =
-    kneserNeyFromPairs(explodedBigrams(ref, textCol), minCount)
+    kneserNeyFromPairs(explodedBigrams(ref, textCol), minCount)._1
 
   /** [[kneserNey]] over an already-exploded (a, b) pair frame — lets
     * the self-reference scorer share ONE tokenize+explode pass between
-    * the model leg and the scoring leg. */
+    * the model leg and the scoring leg. Also returns the persisted
+    * bigram counts the model reads three times. */
   private def kneserNeyFromPairs(pairs: DataFrame,
-      minCount: Long): DataFrame = {
+      minCount: Long): (DataFrame, DataFrame) = {
     val refb = pairs.select(col("a"), col("b"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("c12"))
@@ -231,7 +232,7 @@ object LangModel {
     val cont = refb.groupBy(col("b"))
       .agg(count(lit(1)).as("n1b"))
     val tot = refb.agg(count(lit(1)).as("n1tot"))
-    refb.filter(col("c12") >= minCount)
+    (refb.filter(col("c12") >= minCount)
       .join(uni, "a")
       .join(cont, "b")
       .join(broadcast(tot)) // one-row continuation total: stat idiom
@@ -240,7 +241,8 @@ object LangModel {
         (greatest(col("c12") * 4 - 3, lit(0L)).cast("double") /
           (col("c1") * 4) +
           (lit(3.0) * col("n1f")) / (col("c1") * 4) *
-            (col("n1b").cast("double") / col("n1tot"))).as("pkn"))
+            (col("n1b").cast("double") / col("n1tot"))).as("pkn")),
+      refb)
   }
 
   /** Per-document scoring under the [[kneserNey]] model — the CCNet
@@ -260,7 +262,16 @@ object LangModel {
     *         more reference-like; docs with < 2 tokens drop out */
   def kneserNeyScore(docs: DataFrame, idCol: String, textCol: String,
       ref: DataFrame, refTextCol: String,
-      minCount: Long = 2L): DataFrame = {
+      minCount: Long = 2L): DataFrame =
+    kneserNeyScoreHeld(docs, idCol, textCol, ref, refTextCol, minCount)._1
+
+  /** [[kneserNeyScore]] and the frames it holds in storage: the
+    * persisted bigram counts and, on the self-reference path, the cut
+    * bigram frame. The caller drops them ([[graft.ops.Cuts.superseding]])
+    * once a cut of the score exists. */
+  private[text] def kneserNeyScoreHeld(docs: DataFrame, idCol: String,
+      textCol: String, ref: DataFrame, refTextCol: String,
+      minCount: Long = 2L): (DataFrame, Seq[DataFrame]) = {
     // SELF-REFERENCE fast path (the q362/curation form — ref IS the
     // corpus): tokenize+explode the bigrams ONCE and feed both the
     // model leg and the scoring leg from the cut; the two legs'
@@ -271,19 +282,21 @@ object LangModel {
       if (selfRef) explodedBigrams(docs, textCol, col(idCol))
         .localCheckpoint()
       else null
-    val kn = (if (selfRef) kneserNeyFromPairs(db0, minCount)
-      else kneserNey(ref, refTextCol, minCount))
-      .select(col("a"), col("b"),
+    val (model, refb) =
+      if (selfRef) kneserNeyFromPairs(db0, minCount)
+      else kneserNeyFromPairs(explodedBigrams(ref, refTextCol), minCount)
+    val kn = model.select(col("a"), col("b"),
         floor(col("pkn") * 1000000.0).cast("long").as("__pm"))
     val db = if (selfRef) db0 else explodedBigrams(docs, textCol, col(idCol))
-    db.join(kn, Seq("a", "b"), "left")
+    (db.join(kn, Seq("a", "b"), "left")
       .select(col(idCol),
         (lit(21L) - blog(coalesce(col("__pm"), lit(0L)) + 1L)).as("__c"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("__c")).as("total_bits"))
       .withColumn("mean_bits_micro",
         floor(col("total_bits").cast("double") * 1000000.0 /
-          col("n_bigrams")).cast("long"))
+          col("n_bigrams")).cast("long")),
+      if (selfRef) Seq(refb, db0) else Seq(refb))
   }
 
   /** DuckDB oracle for [[kneserNeyScore]]: the q337 chain + the same

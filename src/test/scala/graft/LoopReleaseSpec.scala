@@ -5,9 +5,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.dedup.NearDup
-import graft.ops.{Bfs, Coverage, Densest, KCore, PageRank, Sampling, Truss}
+import graft.ops.{Betweenness, Bfs, Coverage, Densest, KCore, Mst, PageRank,
+  Sampling, Truss, Walks}
 import graft.similarity.GraphANN
-import graft.text.{Bpe, SuffixArray}
+import graft.text.{Bpe, Curate, SuffixArray}
 
 /** Loop operators release superseded checkpoint generations: after a
   * call, with its result materialized, only the cuts the result still
@@ -135,5 +136,43 @@ class LoopReleaseSpec extends SparkSuite {
         Seq(topk, nScored)
       } == 2 + rounds, s"rounds = $rounds")
     }
+  }
+
+  test("boruvka keeps only the last forest") {
+    val weighted = path.withColumn("w", col("dst") * 3L % 5L)
+    for (rounds <- Seq(1, 16))
+      assert(heldBy(Mst.boruvka(weighted, "src", "dst", "w",
+        rounds = rounds)) == 1, s"rounds = $rounds")
+  }
+
+  test("betweenness keeps only its backward generations") {
+    val seeds = Seq(1L, 7L).toDF("node")
+    for (hops <- Seq(1, 3))
+      assert(heldBy(Betweenness.fromSeeds(path, "src", "dst", seeds,
+        hops)) == hops + 1, s"hops = $hops")
+  }
+
+  test("walks keep only their frontier generations") {
+    assert(heldBy(Walks.deterministicWalks(path, "src", "dst",
+      walksPerNode = 2, steps = 3, salt = "w")) == 4)
+  }
+
+  test("attrition and attritionRelease keep only their datasheet cut") {
+    // one doc per stage: short, repetitive, blocked, an exact copy, PII,
+    // a benchmark leak and a near copy
+    val base = "the quick brown fox jumps over a lazy dog today"
+    val docs = Seq((1L, base), (2L, "xx"), (3L, s"$base $base"),
+      (4L, "the quick brown fox has a bad phrase inside it now"),
+      (5L, base), (6L, s"$base contact me at bob@example.com now"),
+      (7L, "the cat and the dog walked along a very quiet forest path"),
+      (8L, s"$base extra")).toDF("doc_id", "text")
+    val bench = Seq(
+      (100L, "the cat and the dog walked along a very quiet forest path"))
+      .toDF("doc_id", "text")
+    val phrases = Seq("bad phrase")
+    assert(heldBy(Curate.attrition(docs, "doc_id", "text", phrases,
+      minTokens = 3L, maxMeanBitsMicro = 30000000L)) == 1)
+    assert(heldBy(Curate.attritionRelease(docs, "doc_id", "text", phrases,
+      bench, minTokens = 3L, maxMeanBitsMicro = 30000000L)) == 1)
   }
 }
